@@ -5,8 +5,11 @@ import scala.collection.mutable
 
 /** Streaming HTML main-content extractor.
   *
-  * Single forward pass over the input, O(tag-depth) state only — no DOM
-  * tree is materialized (north-star requirement for multi-MB turns). Text
+  * Single forward pass over `HtmlTokenizer` tokens, O(tag-depth) state
+  * only — no DOM tree is materialized (north-star requirement for
+  * multi-MB turns). Comments, declarations, processing instructions and
+  * `<script>`/`<style>` bodies never reach the text (the tokenizer's
+  * rules); entities decode and whitespace collapses (`CollapsedText`). Text
   * is segmented into blocks at block-level tag boundaries; each block
   * carries (textLen, linkTextLen, tagDepth). Blocks are classified
   * Boilerpipe/Readability-style by text length and link density
@@ -14,14 +17,14 @@ import scala.collection.mutable
   * delegates to an OCR+LLM chain, ref: src/processing.py:55-148).
   *
   * Resilient to malformed input (unclosed tags, truncation mid-tag):
-  * the scanner never throws; best-effort text is emitted, mirroring the
+  * never throws; best-effort text is emitted, mirroring the
   * reference's swallow-and-continue (agents/sql_agent/utils.py:113-118).
   */
 object HtmlExtractor {
 
   /** Subtrees whose text is never main content. */
   private val dropTags = Set(
-    "script", "style", "head", "nav", "aside", "footer", "header",
+    "head", "nav", "aside", "footer", "header",
     "noscript", "svg", "form", "button", "iframe", "select", "option")
 
   /** Tags that terminate the current text block. */
@@ -36,172 +39,67 @@ object HtmlExtractor {
     "br", "hr", "img", "input", "meta", "link", "area", "base", "col",
     "embed", "source", "track", "wbr")
 
-  private val namedEntities = Map(
-    "amp" -> '&', "lt" -> '<', "gt" -> '>', "quot" -> '"',
-    "apos" -> '\'', "nbsp" -> ' ')
-
   /** Minimum trimmed block length to be kept as content. */
   val MinBlockLen = 25
 
   /** Maximum link density (link chars / text chars) for a content block. */
   val MaxLinkDensity = 0.33
 
-  private final class Block {
-    val sb = new java.lang.StringBuilder
-    var linkChars = 0
-    var lastWasSpace = true // collapse whitespace runs; drop leading ws
-    def appendText(s: String, inLink: Boolean): Unit =
-      appendRange(s, 0, s.length, inLink)
-    // range variant: bulk text runs append straight from the input
-    // string — no per-run substring copy, and each non-whitespace word
-    // run lands as ONE arraycopy instead of char-at-a-time appends
-    def appendRange(s: String, from: Int, until: Int, inLink: Boolean): Unit = {
-      var i = from
-      while (i < until) {
-        if (Character.isWhitespace(s.charAt(i))) {
-          if (!lastWasSpace) { sb.append(' '); if (inLink) linkChars += 1; lastWasSpace = true }
-          i += 1
-        } else {
-          var j = i + 1
-          while (j < until && !Character.isWhitespace(s.charAt(j))) j += 1
-          sb.append(s, i, j)
-          if (inLink) linkChars += j - i
-          lastWasSpace = false
-          i = j
-        }
-      }
-    }
-    def text: String = { // trim trailing single space left by collapse
-      val n = sb.length
-      if (n > 0 && sb.charAt(n - 1) == ' ') sb.substring(0, n - 1) else sb.toString
-    }
-  }
-
   def extract(html: String): Extracted = {
-    val n = html.length
+    import HtmlTokenizer._
+    val tok = new HtmlTokenizer(html)
     val blocks = mutable.ArrayBuffer.empty[(String, Int)] // (text, linkChars)
-    var cur = new Block
+    val buf = new CollapsedText
+    var linkChars = 0
     // O(depth) state
     val openStack = mutable.ArrayBuffer.empty[String]
     var dropDepth = 0 // >0 while inside a dropped subtree
     var anchorDepth = 0
 
     def flush(): Unit = {
-      val t = cur.text
-      if (t.nonEmpty) { blocks += ((t, cur.linkChars)); cur = new Block }
-      else { // empty block: reset in place, no realloc (most flushes)
-        cur.sb.setLength(0); cur.linkChars = 0; cur.lastWasSpace = true
-      }
+      val t = buf.result()
+      if (t.nonEmpty) blocks += ((t, linkChars))
+      buf.clear(); linkChars = 0
     }
-    // next '&' at/after the scan position, lazily advanced — lets the
-    // text-run scan below use the intrinsic single-char indexOf instead
-    // of a scalar two-compare loop
-    var ampNext = html.indexOf('&')
-
-    var i = 0
-    while (i < n) {
-      val c = html.charAt(i)
-      if (c == '<') {
-        // comment?
-        if (i + 3 < n && html.charAt(i + 1) == '!' && html.charAt(i + 2) == '-' && html.charAt(i + 3) == '-') {
-          val end = html.indexOf("-->", i + 4)
-          i = if (end < 0) n else end + 3
-        } else if (i + 1 < n && html.charAt(i + 1) == '?') {
-          // processing instruction: consume to the '?>' terminator — a bare
-          // '>' may sit inside quoted PI data (<?xml-stylesheet href="a>b"?>).
-          // Unterminated PI (stray '<?' from a broken PHP short tag): HTML5
-          // bogus-comment semantics — end at the first '>' instead of
-          // swallowing the rest of the document.
-          val end = html.indexOf("?>", i + 2)
-          i = if (end >= 0) end + 2
-          else {
-            val gt = html.indexOf('>', i + 2)
-            if (gt < 0) n else gt + 1
-          }
-        } else if (i + 1 < n && (html.charAt(i + 1).isLetter || html.charAt(i + 1) == '/' || html.charAt(i + 1) == '!')) {
-          // parse tag
-          val closing = html.charAt(i + 1) == '/'
-          var j = i + (if (closing) 2 else 1)
-          val nameStart = j
-          while (j < n && (html.charAt(j).isLetterOrDigit)) j += 1
-          val name = html.substring(nameStart, j).toLowerCase
-          // scan to '>' honoring quoted attribute values
-          var quote: Char = 0
-          var selfClose = false
-          var k = j
-          var done = false
-          while (k < n && !done) {
-            val ch = html.charAt(k)
-            if (quote != 0) { if (ch == quote) quote = 0 }
-            else if (ch == '"' || ch == '\'') quote = ch
-            else if (ch == '>') { selfClose = k > j && html.charAt(k - 1) == '/'; done = true }
-            k += 1
-          }
-          val tagEnd = if (done) k else n // truncated mid-tag: consume rest
-          // restore anchor/drop state for every entry popped off the open
-          // stack — this is what makes mis-nested closes (</div> closing
-          // an unclosed <a> or <nav>) recover instead of poisoning the
-          // rest of the document
-          def popRange(from: Int): Unit = {
-            var p = openStack.length - 1
-            while (p >= from) {
-              val popped = openStack(p)
-              if (popped == "a" && anchorDepth > 0) anchorDepth -= 1
-              if (dropTags.contains(popped) && dropDepth > 0) dropDepth -= 1
-              p -= 1
-            }
-            openStack.remove(from, openStack.length - from)
-          }
-          if (name.nonEmpty) {
-            if (!closing) {
-              if (blockTags.contains(name)) flush()
-              val effectivelyVoid = voidTags.contains(name) || selfClose
-              if (!effectivelyVoid) {
-                if (name == "a") anchorDepth += 1
-                if (dropTags.contains(name)) dropDepth += 1
-                openStack += name
-              }
-              // raw-text elements: skip to the closing tag verbatim
-              // (skip only when actually open — a self-closed <script/>
-              // has no raw-text body)
-              if ((name == "script" || name == "style") && !effectivelyVoid) {
-                val close = indexOfIgnoreCase(html, s"</$name", tagEnd)
-                if (close >= 0) {
-                  val gt = html.indexOf('>', close)
-                  i = if (gt < 0) n else gt + 1
-                  popRange(openStack.length - 1) // pops the script/style itself
-                } else {
-                  i = n // unterminated script/style: rest is dropped
-                }
-              } else i = tagEnd
-            } else {
-              if (blockTags.contains(name)) flush()
-              // pop to matching open tag if present (tolerates misnesting;
-              // popRange restores anchor/drop state for skipped entries)
-              val idx = openStack.lastIndexOf(name)
-              if (idx >= 0) popRange(idx)
-              i = tagEnd
-            }
-          } else i = tagEnd
-        } else {
-          // stray '<' treated as text
-          if (dropDepth == 0) cur.appendText("<", anchorDepth > 0)
-          i += 1
-        }
-      } else if (c == '&') {
-        val (decoded, next) = decodeEntity(html, i)
-        if (dropDepth == 0) cur.appendText(decoded, anchorDepth > 0)
-        i = next
-      } else {
-        // bulk-append plain text run up to next special char (both
-        // bounds found by the vectorized indexOf)
-        val lt = html.indexOf('<', i)
-        if (ampNext >= 0 && ampNext < i) ampNext = html.indexOf('&', i)
-        var j = if (lt < 0) n else lt
-        if (ampNext >= 0 && ampNext < j) j = ampNext
-        if (dropDepth == 0) cur.appendRange(html, i, j, anchorDepth > 0)
-        i = j
+    // restore anchor/drop state for every entry popped off the open
+    // stack — this is what makes mis-nested closes (</div> closing an
+    // unclosed <a> or <nav>) recover instead of poisoning the rest of
+    // the document
+    def popRange(from: Int): Unit = {
+      var p = openStack.length - 1
+      while (p >= from) {
+        val popped = openStack(p)
+        if (popped == "a" && anchorDepth > 0) anchorDepth -= 1
+        if (dropTags.contains(popped) && dropDepth > 0) dropDepth -= 1
+        p -= 1
       }
+      openStack.remove(from, openStack.length - from)
+    }
+
+    var kind = tok.next()
+    while (kind != End) {
+      if (kind == Text) {
+        if (dropDepth == 0) {
+          val before = buf.length
+          buf.append(tok)
+          if (anchorDepth > 0) linkChars += buf.length - before
+        }
+      } else {
+        val name = tok.name
+        if (blockTags.contains(name)) flush()
+        if (kind == StartTag) {
+          if (!voidTags.contains(name) && !tok.selfClosed) {
+            if (name == "a") anchorDepth += 1
+            if (dropTags.contains(name)) dropDepth += 1
+            openStack += name
+          }
+        } else {
+          // pop to the matching open tag if present (tolerates misnesting)
+          val idx = openStack.lastIndexOf(name)
+          if (idx >= 0) popRange(idx)
+        }
+      }
+      kind = tok.next()
     }
     flush()
 
@@ -218,36 +116,5 @@ object HtmlExtractor {
       spans += Span("content", s, out.length)
     }
     Extracted(out.toString, spans.toSeq, None)
-  }
-
-  /** Case-insensitive indexOf without copying the haystack. */
-  private def indexOfIgnoreCase(s: String, needle: String, from: Int): Int = {
-    val n = s.length; val m = needle.length
-    var i = math.max(from, 0)
-    while (i + m <= n) {
-      var j = 0
-      while (j < m && Character.toLowerCase(s.charAt(i + j)) == needle.charAt(j)) j += 1
-      if (j == m) return i
-      i += 1
-    }
-    -1
-  }
-
-  /** Decode one entity at `html(i) == '&'`; returns (text, nextIndex). */
-  private def decodeEntity(html: String, i: Int): (String, Int) = {
-    val n = html.length
-    val semi = html.indexOf(';', i + 1)
-    if (semi < 0 || semi - i > 10) return ("&", i + 1)
-    val body = html.substring(i + 1, semi)
-    if (body.startsWith("#x") || body.startsWith("#X")) {
-      try (Character.toChars(Integer.parseInt(body.substring(2), 16)).mkString, semi + 1)
-      catch { case _: Exception => ("&", i + 1) }
-    } else if (body.startsWith("#")) {
-      try (Character.toChars(Integer.parseInt(body.substring(1))).mkString, semi + 1)
-      catch { case _: Exception => ("&", i + 1) }
-    } else namedEntities.get(body) match {
-      case Some(ch) => (ch.toString, semi + 1)
-      case None     => ("&", i + 1)
-    }
   }
 }

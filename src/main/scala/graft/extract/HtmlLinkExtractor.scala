@@ -7,12 +7,12 @@ import scala.collection.mutable
   * corpora, link graphs; the host-graph ops q62/q85/q110/q113 consume
   * exactly this shape once hrefs are host-normalized).
   *
-  * Single forward pass, O(1) state beyond the current capture. Contract
-  * (each clause pinned by HtmlLinkSpec):
+  * Single forward pass over `HtmlTokenizer` tokens, O(1) state beyond
+  * the current capture. Contract (each clause pinned by HtmlLinkSpec):
   *  - A link is an `<a>` open tag carrying an `href` attribute (name
   *    matched case-insensitively; quoted with `"` or `'`, or unquoted to
   *    the next whitespace/`>`). `<a>` without href (pure anchors) is not
-  *    a link.
+  *    a link, nor is an `<a>` truncated before its `>`.
   *  - Anchor text runs to the matching `</a>`: inner markup stripped,
   *    entities decoded, whitespace collapsed — the `HtmlExtractor`
   *    discipline. Entities in the href VALUE decode too (`&amp;` in
@@ -20,177 +20,37 @@ import scala.collection.mutable
   *  - A new `<a href>` while one is open flushes the previous link
   *    (browser auto-close); EOF flushes an unterminated link with the
   *    text accumulated so far. Never throws on any input.
-  *  - `<script>`/`<style>` bodies and comments are skipped — an `<a>`
-  *    literal inside JavaScript is not a link.
+  *  - The tokenizer's rules: comments, declarations, processing
+  *    instructions and `<script>`/`<style>` bodies never produce links
+  *    or anchor text (an `<a>` literal inside JavaScript is not a link),
+  *    and a self-closed `<script/>` hides nothing after it.
   */
 object HtmlLinkExtractor {
 
   final case class Link(linkIdx: Int, href: String, anchor: String)
 
-  private val namedEntities = Map(
-    "amp" -> '&', "lt" -> '<', "gt" -> '>', "quot" -> '"',
-    "apos" -> '\'', "nbsp" -> ' ')
-
   def extract(html: String): Seq[Link] = {
-    val n = html.length
+    import HtmlTokenizer._
+    val tok = new HtmlTokenizer(html)
     val out = mutable.ArrayBuffer.empty[Link]
     var href: String = null // non-null while a link capture is open
-    val sb = new java.lang.StringBuilder
-    var lastWasSpace = true
-
-    def appendText(s: String, from: Int, until: Int): Unit = if (href != null) {
-      var i = from
-      while (i < until) {
-        if (Character.isWhitespace(s.charAt(i))) {
-          if (!lastWasSpace) { sb.append(' '); lastWasSpace = true }
-          i += 1
-        } else {
-          var j = i + 1
-          while (j < until && !Character.isWhitespace(s.charAt(j))) j += 1
-          sb.append(s, i, j)
-          lastWasSpace = false
-          i = j
-        }
-      }
-    }
+    val anchor = new CollapsedText
 
     def flush(): Unit = if (href != null) {
-      val m = sb.length
-      val t = if (m > 0 && sb.charAt(m - 1) == ' ') sb.substring(0, m - 1) else sb.toString
-      out += Link(out.length, href, t)
-      href = null; sb.setLength(0); lastWasSpace = true
+      out += Link(out.length, href, anchor.result())
+      href = null; anchor.clear()
     }
 
-    var i = 0
-    while (i < n) {
-      val c = html.charAt(i)
-      if (c == '<') {
-        if (i + 3 < n && html.charAt(i + 1) == '!' && html.charAt(i + 2) == '-' && html.charAt(i + 3) == '-') {
-          val end = html.indexOf("-->", i + 4)
-          i = if (end < 0) n else end + 3
-        } else if (i + 1 < n && (html.charAt(i + 1).isLetter || html.charAt(i + 1) == '/')) {
-          val closing = html.charAt(i + 1) == '/'
-          var j = i + (if (closing) 2 else 1)
-          val nameStart = j
-          while (j < n && html.charAt(j).isLetterOrDigit) j += 1
-          val name = html.substring(nameStart, j).toLowerCase
-          var quote: Char = 0
-          var k = j
-          var done = false
-          while (k < n && !done) {
-            val c2 = html.charAt(k)
-            if (quote != 0) { if (c2 == quote) quote = 0 }
-            else if (c2 == '"' || c2 == '\'') quote = c2
-            else if (c2 == '>') done = true
-            k += 1
-          }
-          val tagEnd = if (done) k else n
-          if (name == "a" && !closing) {
-            // a tag truncated mid-attributes (no '>') never opens a link
-            if (done) attrValue(html, j, tagEnd - 1, "href") match {
-              case Some(v) => flush(); href = decodeAll(v)
-              case None    => // <a> without href: not a link; keep any open capture
-            }
-            i = tagEnd
-          } else if (name == "a" && closing) {
-            flush(); i = tagEnd
-          } else if ((name == "script" || name == "style") && !closing) {
-            val close = indexOfIgnoreCase(html, s"</$name", tagEnd)
-            i = if (close < 0) n
-            else { val gt = html.indexOf('>', close); if (gt < 0) n else gt + 1 }
-          } else i = tagEnd // other markup: stripped from anchor text
-        } else {
-          appendText("<", 0, 1); i += 1
-        }
-      } else if (c == '&') {
-        val (decoded, next) = decodeEntity(html, i)
-        appendText(decoded, 0, decoded.length)
-        i = next
-      } else {
-        val lt = html.indexOf('<', i)
-        val amp = html.indexOf('&', i)
-        var j = if (lt < 0) n else lt
-        if (amp >= 0 && amp < j) j = amp
-        appendText(html, i, j)
-        i = j
+    var kind = tok.next()
+    while (kind != End) {
+      if (kind == Text) { if (href != null) anchor.append(tok) }
+      else if (tok.name == "a") {
+        if (kind == EndTag) flush()
+        else if (tok.terminated) tok.attr("href").foreach { v => flush(); href = v }
       }
+      kind = tok.next()
     }
     flush() // unterminated link at EOF
     out.toSeq
-  }
-
-  /** Scan `attr=value` pairs in a tag body [from, until); return the
-    * named attribute's raw value (quoted or unquoted), else None.
-    */
-  private def attrValue(s: String, from: Int, until: Int, attr: String): Option[String] = {
-    var i = from
-    while (i < until) {
-      // skip to an attribute-name start
-      while (i < until && !Character.isLetter(s.charAt(i))) i += 1
-      val nameStart = i
-      while (i < until && (Character.isLetterOrDigit(s.charAt(i)) || s.charAt(i) == '-')) i += 1
-      if (i == nameStart) return None
-      val name = s.substring(nameStart, i).toLowerCase
-      while (i < until && Character.isWhitespace(s.charAt(i))) i += 1
-      if (i < until && s.charAt(i) == '=') {
-        i += 1
-        while (i < until && Character.isWhitespace(s.charAt(i))) i += 1
-        if (i < until && (s.charAt(i) == '"' || s.charAt(i) == '\'')) {
-          val q = s.charAt(i)
-          val end = s.indexOf(q, i + 1)
-          val stop = if (end < 0 || end > until) until else end
-          val v = s.substring(i + 1, stop)
-          if (name == attr) return Some(v)
-          i = if (stop == until) until else stop + 1
-        } else {
-          val vs = i
-          while (i < until && !Character.isWhitespace(s.charAt(i)) && s.charAt(i) != '>') i += 1
-          if (name == attr) return Some(s.substring(vs, i))
-        }
-      } // bare attribute (no '='): nothing to return for it
-    }
-    None
-  }
-
-  private def decodeAll(s: String): String = {
-    if (s.indexOf('&') < 0) return s
-    val sb = new java.lang.StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '&') {
-        val (d, next) = decodeEntity(s, i)
-        sb.append(d); i = next
-      } else { sb.append(s.charAt(i)); i += 1 }
-    }
-    sb.toString
-  }
-
-  private[extract] def indexOfIgnoreCase(s: String, needle: String, from: Int): Int = {
-    val n = s.length; val m = needle.length
-    var i = math.max(from, 0)
-    while (i + m <= n) {
-      var j = 0
-      while (j < m && Character.toLowerCase(s.charAt(i + j)) == needle.charAt(j)) j += 1
-      if (j == m) return i
-      i += 1
-    }
-    -1
-  }
-
-  private[extract] def decodeEntity(html: String, i: Int): (String, Int) = {
-    val n = html.length
-    val semi = html.indexOf(';', i + 1)
-    if (semi < 0 || semi - i > 10) return ("&", i + 1)
-    val body = html.substring(i + 1, semi)
-    if (body.startsWith("#x") || body.startsWith("#X")) {
-      try (Character.toChars(Integer.parseInt(body.substring(2), 16)).mkString, semi + 1)
-      catch { case _: Exception => ("&", i + 1) }
-    } else if (body.startsWith("#")) {
-      try (Character.toChars(Integer.parseInt(body.substring(1))).mkString, semi + 1)
-      catch { case _: Exception => ("&", i + 1) }
-    } else namedEntities.get(body) match {
-      case Some(ch) => (ch.toString, semi + 1)
-      case None     => ("&", i + 1)
-    }
   }
 }

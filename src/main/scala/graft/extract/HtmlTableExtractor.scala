@@ -7,8 +7,9 @@ import scala.collection.mutable
   * records out of documents; tables are the HTML-native carrier, ref:
   * src/processing.py:55-148 extracts per-field records the same way).
   *
-  * Single forward pass, O(tag-depth) state, no DOM tree (north-star
-  * requirement for multi-MB turns). Emits one row per cell:
+  * Single forward pass over `HtmlTokenizer` tokens, O(tag-depth) state,
+  * no DOM tree (north-star requirement for multi-MB turns). Emits one
+  * row per cell:
   * (table_idx, row_idx, col_idx, header, text).
   *
   * Contract (each point pinned by HtmlTableSpec):
@@ -24,18 +25,15 @@ import scala.collection.mutable
   *    `HtmlExtractor`).
   *  - Malformed input never throws: an unclosed `<td>` is flushed at the
   *    next cell/row/table boundary or EOF; a `<td>` before any `<tr>`
-  *    opens row 0 implicitly; stray close tags are ignored;
-  *    `<script>`/`<style>` bodies are skipped verbatim, so a table
-  *    literal inside JavaScript is NOT a table.
+  *    opens row 0 implicitly; stray close tags are ignored.
+  *  - The tokenizer's rules: comments, declarations, processing
+  *    instructions and `<script>`/`<style>` bodies are never cell text,
+  *    so a table literal inside JavaScript is NOT a table.
   */
 object HtmlTableExtractor {
 
   final case class Cell(
       tableIdx: Int, rowIdx: Int, colIdx: Int, header: Boolean, text: String)
-
-  private val namedEntities = Map(
-    "amp" -> '&', "lt" -> '<', "gt" -> '>', "quot" -> '"',
-    "apos" -> '\'', "nbsp" -> ' ')
 
   /** Per-open-table parse state (stack entry — nesting depth deep). */
   private final class TableCtx(val tableIdx: Int) {
@@ -43,48 +41,23 @@ object HtmlTableExtractor {
     var colIdx = -1
     var inCell = false
     var header = false
-    val sb = new java.lang.StringBuilder
-    var lastWasSpace = true
+    val text = new CollapsedText
   }
 
   def extract(html: String): Seq[Cell] = {
-    val n = html.length
+    import HtmlTokenizer._
+    val tok = new HtmlTokenizer(html)
     val out = mutable.ArrayBuffer.empty[Cell]
     val tables = mutable.ArrayBuffer.empty[TableCtx] // open-table stack
     var nextTableIdx = 0
 
     def cur: TableCtx = tables.last
 
-    def appendText(s: String, from: Int, until: Int): Unit = {
-      if (tables.nonEmpty && cur.inCell) {
-        val c = cur
-        var i = from
-        while (i < until) {
-          if (Character.isWhitespace(s.charAt(i))) {
-            if (!c.lastWasSpace) { c.sb.append(' '); c.lastWasSpace = true }
-            i += 1
-          } else {
-            var j = i + 1
-            while (j < until && !Character.isWhitespace(s.charAt(j))) j += 1
-            c.sb.append(s, i, j)
-            c.lastWasSpace = false
-            i = j
-          }
-        }
-      }
-    }
-
     def flushCell(): Unit = if (tables.nonEmpty && cur.inCell) {
       val c = cur
-      val t = {
-        val m = c.sb.length
-        if (m > 0 && c.sb.charAt(m - 1) == ' ') c.sb.substring(0, m - 1)
-        else c.sb.toString
-      }
-      out += Cell(c.tableIdx, math.max(c.rowIdx, 0), c.colIdx, c.header, t)
+      out += Cell(c.tableIdx, math.max(c.rowIdx, 0), c.colIdx, c.header, c.text.result())
       c.inCell = false
-      c.sb.setLength(0)
-      c.lastWasSpace = true
+      c.text.clear()
     }
 
     def openRow(): Unit = if (tables.nonEmpty) {
@@ -103,102 +76,24 @@ object HtmlTableExtractor {
       c.header = header
     }
 
-    var i = 0
-    while (i < n) {
-      val ch = html.charAt(i)
-      if (ch == '<') {
-        if (i + 3 < n && html.charAt(i + 1) == '!' && html.charAt(i + 2) == '-' && html.charAt(i + 3) == '-') {
-          val end = html.indexOf("-->", i + 4)
-          i = if (end < 0) n else end + 3
-        } else if (i + 1 < n && html.charAt(i + 1) == '?') {
-          val end = html.indexOf("?>", i + 2)
-          i = if (end >= 0) end + 2
-          else { val gt = html.indexOf('>', i + 2); if (gt < 0) n else gt + 1 }
-        } else if (i + 1 < n && (html.charAt(i + 1).isLetter || html.charAt(i + 1) == '/')) {
-          val closing = html.charAt(i + 1) == '/'
-          var j = i + (if (closing) 2 else 1)
-          val nameStart = j
-          while (j < n && html.charAt(j).isLetterOrDigit) j += 1
-          val name = html.substring(nameStart, j).toLowerCase
-          // scan to '>' honoring quoted attribute values
-          var quote: Char = 0
-          var selfClose = false
-          var k = j
-          var done = false
-          while (k < n && !done) {
-            val c2 = html.charAt(k)
-            if (quote != 0) { if (c2 == quote) quote = 0 }
-            else if (c2 == '"' || c2 == '\'') quote = c2
-            else if (c2 == '>') { selfClose = k > j && html.charAt(k - 1) == '/'; done = true }
-            k += 1
-          }
-          val tagEnd = if (done) k else n
-          name match {
-            case "table" if !closing && !selfClose =>
-              tables += new TableCtx(nextTableIdx); nextTableIdx += 1
-              i = tagEnd
-            case "table" if closing =>
-              if (tables.nonEmpty) { flushCell(); tables.remove(tables.length - 1) }
-              i = tagEnd
-            case "tr" if !closing && !selfClose => openRow(); i = tagEnd
-            case "tr" if closing               => flushCell(); i = tagEnd
-            case ("td" | "th") if !closing && !selfClose =>
-              openCell(name == "th"); i = tagEnd
-            case ("td" | "th") if closing => flushCell(); i = tagEnd
-            case ("script" | "style") if !closing && !selfClose =>
-              // raw-text body: skip verbatim to the close tag
-              val close = indexOfIgnoreCase(html, s"</$name", tagEnd)
-              i = if (close < 0) n
-              else { val gt = html.indexOf('>', close); if (gt < 0) n else gt + 1 }
-            case _ => i = tagEnd // inline/other markup: stripped
-          }
-        } else {
-          appendText("<", 0, 1); i += 1
-        }
-      } else if (ch == '&') {
-        val (decoded, next) = decodeEntity(html, i)
-        appendText(decoded, 0, decoded.length)
-        i = next
-      } else {
-        val lt = html.indexOf('<', i)
-        val amp = html.indexOf('&', i)
-        var j = if (lt < 0) n else lt
-        if (amp >= 0 && amp < j) j = amp
-        appendText(html, i, j)
-        i = j
+    var kind = tok.next()
+    while (kind != End) {
+      if (kind == Text) { if (tables.nonEmpty && cur.inCell) cur.text.append(tok) }
+      else if (kind == EndTag) tok.name match {
+        case "table" => if (tables.nonEmpty) { flushCell(); tables.remove(tables.length - 1) }
+        case "tr" | "td" | "th" => flushCell()
+        case _ => // inline/other markup: stripped
       }
+      else if (!tok.selfClosed) tok.name match {
+        case "table" => tables += new TableCtx(nextTableIdx); nextTableIdx += 1
+        case "tr" => openRow()
+        case "td" | "th" => openCell(tok.name == "th")
+        case _ =>
+      }
+      kind = tok.next()
     }
     // EOF: flush any open cell in every still-open table (outermost last)
     while (tables.nonEmpty) { flushCell(); tables.remove(tables.length - 1) }
     out.toSeq
-  }
-
-  private def indexOfIgnoreCase(s: String, needle: String, from: Int): Int = {
-    val n = s.length; val m = needle.length
-    var i = math.max(from, 0)
-    while (i + m <= n) {
-      var j = 0
-      while (j < m && Character.toLowerCase(s.charAt(i + j)) == needle.charAt(j)) j += 1
-      if (j == m) return i
-      i += 1
-    }
-    -1
-  }
-
-  private def decodeEntity(html: String, i: Int): (String, Int) = {
-    val n = html.length
-    val semi = html.indexOf(';', i + 1)
-    if (semi < 0 || semi - i > 10) return ("&", i + 1)
-    val body = html.substring(i + 1, semi)
-    if (body.startsWith("#x") || body.startsWith("#X")) {
-      try (Character.toChars(Integer.parseInt(body.substring(2), 16)).mkString, semi + 1)
-      catch { case _: Exception => ("&", i + 1) }
-    } else if (body.startsWith("#")) {
-      try (Character.toChars(Integer.parseInt(body.substring(1))).mkString, semi + 1)
-      catch { case _: Exception => ("&", i + 1) }
-    } else namedEntities.get(body) match {
-      case Some(c) => (c.toString, semi + 1)
-      case None    => ("&", i + 1)
-    }
   }
 }

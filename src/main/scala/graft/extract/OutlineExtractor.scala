@@ -12,13 +12,16 @@ import scala.collection.mutable
   *
   * Single forward pass, O(heading-depth) state (the breadcrumb stack).
   * Contract (each clause pinned by OutlineSpec):
-  *  - HTML: a section is an `<h1>`-`<h6>` open tag; its title runs to the
-  *    matching close tag. Inline markup strips, entities decode,
-  *    whitespace collapses (the `HtmlExtractor` discipline). A new
-  *    heading open OR any block-level tag (p/div/table/ul/ol/li/section/
-  *    article/nav/blockquote/pre/tr/td/th/hr) flushes an unclosed
-  *    heading (browser auto-close); EOF flushes too. `<script>`/`<style>`
-  *    bodies and comments never produce headings. Never throws.
+  *  - HTML (over `HtmlTokenizer` tokens): a section is an `<h1>`-`<h6>`
+  *    open tag; its title runs to the matching close tag. Inline markup
+  *    strips, entities decode, whitespace collapses (the `HtmlExtractor`
+  *    discipline). A new heading open OR any block-level tag (p/div/table/
+  *    ul/ol/li/section/article/nav/blockquote/pre/tr/td/th/hr) flushes an
+  *    unclosed heading (browser auto-close); EOF flushes too. The
+  *    tokenizer's rules: comments, declarations, processing instructions
+  *    and `<script>`/`<style>` bodies never produce headings or title
+  *    text, and a self-closed `<script/>` hides nothing after it. Never
+  *    throws.
   *  - Markdown: a section is an ATX line — 1-6 leading `#` followed by
   *    whitespace or end-of-line (`#x` is prose, 7+ hashes are prose). A
   *    trailing run of `#` preceded by whitespace strips (GFM closing
@@ -57,33 +60,15 @@ object OutlineExtractor {
   }
 
   def extractHtml(html: String): Seq[Section] = {
-    val n = html.length
+    import HtmlTokenizer._
+    val tok = new HtmlTokenizer(html)
     val ps = new PathStack
     var level = 0 // 0 = idle, 1-6 = capturing that heading level
-    val sb = new java.lang.StringBuilder
-    var lastWasSpace = true
-
-    def appendText(s: String, from: Int, until: Int): Unit = if (level > 0) {
-      var i = from
-      while (i < until) {
-        if (Character.isWhitespace(s.charAt(i))) {
-          if (!lastWasSpace) { sb.append(' '); lastWasSpace = true }
-          i += 1
-        } else {
-          var j = i + 1
-          while (j < until && !Character.isWhitespace(s.charAt(j))) j += 1
-          sb.append(s, i, j)
-          lastWasSpace = false
-          i = j
-        }
-      }
-    }
+    val title = new CollapsedText
 
     def flush(): Unit = if (level > 0) {
-      val m = sb.length
-      val t = if (m > 0 && sb.charAt(m - 1) == ' ') sb.substring(0, m - 1) else sb.toString
-      ps.emit(level, t)
-      level = 0; sb.setLength(0); lastWasSpace = true
+      ps.emit(level, title.result())
+      level = 0; title.clear()
     }
 
     def headingLevel(name: String): Int =
@@ -91,62 +76,17 @@ object OutlineExtractor {
         name.charAt(1) >= '1' && name.charAt(1) <= '6') name.charAt(1) - '0'
       else 0
 
-    var i = 0
-    while (i < n) {
-      val c = html.charAt(i)
-      if (c == '<') {
-        if (i + 3 < n && html.charAt(i + 1) == '!' && html.charAt(i + 2) == '-' && html.charAt(i + 3) == '-') {
-          val end = html.indexOf("-->", i + 4)
-          i = if (end < 0) n else end + 3
-        } else if (i + 1 < n && (html.charAt(i + 1).isLetter || html.charAt(i + 1) == '/')) {
-          val closing = html.charAt(i + 1) == '/'
-          var j = i + (if (closing) 2 else 1)
-          val nameStart = j
-          while (j < n && html.charAt(j).isLetterOrDigit) j += 1
-          val name = html.substring(nameStart, j).toLowerCase
-          // quote-aware scan for the tag end (a '>' inside a quoted
-          // attribute value does not close the tag); a tag truncated
-          // mid-attributes consumes to EOF
-          var quote: Char = 0
-          var k = j
-          var done = false
-          while (k < n && !done) {
-            val c2 = html.charAt(k)
-            if (quote != 0) { if (c2 == quote) quote = 0 }
-            else if (c2 == '"' || c2 == '\'') quote = c2
-            else if (c2 == '>') done = true
-            k += 1
-          }
-          val tagEnd = if (done) k else n
-          val hl = headingLevel(name)
-          if (hl > 0 && !closing) {
-            flush() // auto-close a dangling heading
-            level = hl
-            i = tagEnd
-          } else if (hl > 0 && closing) {
-            flush(); i = tagEnd
-          } else if ((name == "script" || name == "style") && !closing) {
-            val close = HtmlLinkExtractor.indexOfIgnoreCase(html, s"</$name", tagEnd)
-            i = if (close < 0) n
-            else { val g2 = html.indexOf('>', close); if (g2 < 0) n else g2 + 1 }
-          } else if (blockFlushTags.contains(name)) {
-            flush(); i = tagEnd
-          } else i = tagEnd // inline/unknown markup: stripped from titles
-        } else {
-          appendText("<", 0, 1); i += 1
-        }
-      } else if (c == '&') {
-        val (decoded, next) = HtmlLinkExtractor.decodeEntity(html, i)
-        appendText(decoded, 0, decoded.length)
-        i = next
-      } else {
-        val lt = html.indexOf('<', i)
-        val amp = html.indexOf('&', i)
-        var j = if (lt < 0) n else lt
-        if (amp >= 0 && amp < j) j = amp
-        appendText(html, i, j)
-        i = j
+    var kind = tok.next()
+    while (kind != End) {
+      if (kind == Text) { if (level > 0) title.append(tok) }
+      else {
+        val hl = headingLevel(tok.name)
+        if (hl > 0) {
+          flush() // a close, or an open auto-closing a dangling heading
+          if (kind == StartTag) level = hl
+        } else if (blockFlushTags.contains(tok.name)) flush()
       }
+      kind = tok.next()
     }
     flush() // unterminated heading at EOF
     ps.sections

@@ -1,11 +1,12 @@
 package graft
 
-import graft.extract.HtmlExtractor
+import graft.extract.{HtmlExtractor, HtmlLinkExtractor, HtmlTableExtractor, OutlineExtractor}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Regression tests for malformed-HTML recovery paths (code-review
   * findings): self-closed raw-text/drop elements and mis-nested closes
-  * must not poison the remainder of the document.
+  * must not poison the remainder of the document, and hostile shapes
+  * must stay linear in every extractor built on `HtmlTokenizer`.
   */
 class HtmlEdgeSpec extends AnyFunSuite {
 
@@ -92,20 +93,35 @@ class HtmlEdgeSpec extends AnyFunSuite {
 
   test("multi-MB turn: single pass, O(depth) state, linear-ish time") {
     // north star: "streaming DOM tokenizer" must handle multi-MB turns
-    // without materializing a DOM. 4 MB document, 50k paragraphs.
+    // without materializing a DOM. An 8 MB tag-dense page of 40k blocks,
+    // each a heading, a paragraph, a link and a one-cell table; the page
+    // holds no ';' and no '?>', so every bare '&' and stray '<?' is a miss
+    val blocks = 40000
     val sb = new StringBuilder("<html><body>")
-    (0 until 50000).foreach { i =>
-      sb.append(s"<div><p>paragraph $i with enough characters to clear the minimum block length</p></div>")
+    (0 until blocks).foreach { i =>
+      sb.append(s"<div><h2>heading $i</h2><?php tag >" +
+        s"<p>paragraph $i with R&D and enough characters to clear the minimum block length</p>" +
+        s"<p>see <a href=\"/doc/$i\">doc $i</a></p><table><tr><td>cell $i</td></tr></table></div>")
     }
     sb.append("</body></html>")
     val html = sb.toString
-    assert(html.length > 4_000_000)
-    val t0 = System.nanoTime()
-    val r = HtmlExtractor.extract(html)
-    val sec = (System.nanoTime() - t0) / 1e9
-    assert(r.spans.length == 50000)
-    assert(r.text.startsWith("paragraph 0 with"))
-    assert(sec < 10.0, f"4MB doc took $sec%.1f s — not streaming-linear")
+    assert(html.length > 8_000_000)
+    def timed[T](name: String)(f: => T): T = {
+      val t0 = System.nanoTime()
+      val r = f
+      val sec = (System.nanoTime() - t0) / 1e9
+      assert(sec < 10.0, f"$name: 8MB doc took $sec%.1f s — not streaming-linear")
+      r
+    }
+    val r = timed("HtmlExtractor")(HtmlExtractor.extract(html))
+    assert(r.spans.length == blocks)
+    assert(r.text.startsWith("paragraph 0 with R&D"))
+    val links = timed("HtmlLinkExtractor")(HtmlLinkExtractor.extract(html))
+    assert(links.length == blocks && links.last.href == s"/doc/${blocks - 1}")
+    val cells = timed("HtmlTableExtractor")(HtmlTableExtractor.extract(html))
+    assert(cells.length == blocks && cells.last.text == s"cell ${blocks - 1}")
+    val sections = timed("OutlineExtractor")(OutlineExtractor.extractHtml(html))
+    assert(sections.length == blocks && sections.last.title == s"heading ${blocks - 1}")
   }
 
   test("pathological nesting depth does not blow the stack") {

@@ -17,6 +17,9 @@ class HtmlLinkSpec extends AnyFunSuite {
       "<a href=\"/a\">one</a><a href='/b'><b>two</b> x</a><a href=/c>three</a>")
     assert(links == Seq(
       Link(0, "/a", "one"), Link(1, "/b", "two x"), Link(2, "/c", "three")))
+    // declarations and processing instructions strip like any markup
+    assert(HtmlLinkExtractor.extract("<a href=/x>A<!x>B<?php y ?>C</a>") ==
+      Seq(Link(0, "/x", "ABC")))
   }
 
   test("entities decode in href values and anchor text") {
@@ -44,6 +47,10 @@ class HtmlLinkSpec extends AnyFunSuite {
       "<script>var a = '<a href=\"/js\">no</a>';</script>" +
         "<!-- <a href=\"/comment\">no</a> --><a href=\"/yes\">yes</a>")
     assert(links == Seq(Link(0, "/yes", "yes")))
+    // a self-closed <script/> has no body to skip
+    assert(HtmlLinkExtractor.extract(
+      "<a href=\"/a\">A</a><script src=\"y.js\"/><a href=\"/b\">B</a><h1>T</h1>") ==
+      Seq(Link(0, "/a", "A"), Link(1, "/b", "B")))
   }
 
   test("malformed input never throws: truncation anywhere") {

@@ -28,6 +28,9 @@ class HtmlTableSpec extends AnyFunSuite {
     val cells = HtmlTableExtractor.extract(
       "<table><tr><td>x&amp;y</td><td><b>u</b> <i>v</i></td><td>&#65;&#x42;</td></tr></table>")
     assert(cells.map(_.text) == Seq("x&y", "u v", "AB"))
+    // declarations strip like any markup
+    assert(HtmlTableExtractor.extract("<table><tr><td>A<!x>B</td></tr></table>").map(_.text) ==
+      Seq("AB"))
   }
 
   test("unclosed <td> flushes at the next cell, row, and table boundary") {

@@ -18,6 +18,9 @@ class OutlineSpec extends AnyFunSuite {
     assert(s == Seq(
       Section(0, 1, "Alpha & Beta", "Alpha & Beta"),
       Section(1, 2, "One A", "Alpha & Beta > One A")))
+    // declarations and processing instructions strip like any markup
+    assert(OutlineExtractor.extractHtml("<h1>A<?php y ?>B<!x>C</h1>") ==
+      Seq(Section(0, 1, "ABC", "ABC")))
   }
 
   test("html: breadcrumb pops by LEVEL, not depth (h2 -> h4 -> h2)") {
@@ -41,6 +44,10 @@ class OutlineSpec extends AnyFunSuite {
       "<script>var a = '<h1>no</h1>';</script><style>h1{}</style>" +
         "<!-- <h2>no</h2> --><h1>yes</h1>")
     assert(s == Seq(Section(0, 1, "yes", "yes")))
+    // a self-closed <script/> has no body to skip
+    assert(OutlineExtractor.extractHtml(
+      "<a href=\"/a\">A</a><script src=\"y.js\"/><a href=\"/b\">B</a><h1>T</h1>") ==
+      Seq(Section(0, 1, "T", "T")))
   }
 
   test("md: ATX levels, trailing closing hashes, emphasis strip") {
