@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, posexplode}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, pmod, posexplode, xxhash64}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -17,12 +17,112 @@ import java.nio.file.{Files, Paths}
   * independent check of the Spark pipeline output.
   */
 object Verify {
+
+  /** Every table an oracle reads as `__SYNTH__/<name>.parquet`, in write
+    * order. The synthetic inputs come first; the last six are sf-dir
+    * intermediates (minhash pairs, band keys, simhash values, ordered
+    * winnow grams, IVF centroids) whose inner hash or training has no
+    * DuckDB equivalent, so their oracles verify the DOWNSTREAM algorithm
+    * over these materialized values; the hash production itself is
+    * covered by local-truth ScalaTests (OpsSpec/TextAlgosSpec/FunctionsSpec).
+    */
+  val synthTables: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "golden_turns" -> ((s, _) => synth.SynthDataset.golden(s, SparkEntry.VerifyConvs).toDF()),
+    "records" -> ((s, _) => ops.ShredOps.structuredRecords(s, SparkEntry.VerifyRecords).toDF()),
+    "web_docs" -> ((s, _) => synth.WebDocs.docs(s, SparkEntry.VerifyWebDocs)),
+    // the generator's by-construction span layout, exploded
+    "golden_spans" -> ((s, _) =>
+      synth.SynthDataset.golden(s, SparkEntry.VerifyConvs).toDF()
+        .select(col("conv_id"), col("turn_idx"), posexplode(col("expected_spans")))
+        .select(col("conv_id"), col("turn_idx"),
+          col("pos").cast("int").as("span_idx"),
+          col("col").getField("kind").as("span_kind"),
+          col("col").getField("start").as("span_start"),
+          col("col").getField("end").as("span_end"))),
+    "retry_turns" -> ((s, _) => synth.RetryCorpus.turns(s, SparkEntry.VerifyRetryConvs).toDF()),
+    "domain_docs" -> ((s, _) => synth.DomainDocs.docs(s, SparkEntry.VerifyDomainDocs)),
+    "golden_cells" -> ((s, _) => synth.TableDocs.goldenCells(s, SparkEntry.VerifyTableDocs)),
+    "golden_links" -> ((s, _) => synth.TableDocs.goldenLinks(s, SparkEntry.VerifyTableDocs)),
+    "golden_sections" -> ((s, _) => synth.OutlineDocs.goldenSections(s, SparkEntry.VerifyOutlineDocs)),
+    "md_golden_cells" -> ((s, _) => synth.MdTableDocs.goldenCells(s, SparkEntry.VerifyMdTableDocs)),
+    "golden_md_links" -> ((s, _) => synth.OutlineDocs.goldenMdLinks(s, SparkEntry.VerifyOutlineDocs)),
+    "golden_section_bodies" -> ((s, _) => synth.OutlineDocs.goldenBodies(s, SparkEntry.VerifyOutlineDocs)),
+    "golden_grid_cells" -> ((s, _) => synth.PdfGridDocs.goldenCells(s, SparkEntry.VerifyPdfGridDocs)),
+    "golden_jitter_cells" -> ((s, _) => synth.PdfGridDocs.goldenJitterCells(s, SparkEntry.VerifyPdfGridDocs)),
+    "noisy_docs" -> ((s, _) => synth.NoisyDocs.docs(s, SparkEntry.VerifyNoisyDocs)),
+    "nfc_docs" -> ((s, _) => synth.NfcDocs.docs(s, SparkEntry.VerifyNfcDocs)),
+    "hyphen_docs" -> ((s, _) => synth.HyphenDocs.docs(s, SparkEntry.VerifyNfcDocs)),
+    "norm_pair_docs" -> ((s, _) => synth.NormPairDocs.docs(s, SparkEntry.VerifyNfcDocs)),
+    "pdf_golden" -> ((s, _) => synth.PdfDocs.golden(s, SparkEntry.VerifyPdfDocs)),
+    "pdf_golden_runs" -> ((s, _) => synth.PdfDocs.goldenRuns(s, SparkEntry.VerifyPdfDocs)),
+    // the store's conv->bucket assignment: xxhash64 has no DuckDB
+    // equivalent, so the map materializes and the oracle verifies the
+    // DOWNSTREAM snapshot algebra (the q18/q22/q36 pattern)
+    "conv_buckets" -> ((s, _) =>
+      synth.SynthDataset.turns(s, SparkEntry.VerifyConvs)
+        .select(col("conv_id")).distinct()
+        .select(col("conv_id"),
+          pmod(xxhash64(col("conv_id")), lit(SparkEntry.TtBuckets.toLong)).cast("int").as("bucket"))),
+    "json_records" -> ((s, _) => synth.JsonRecords.docs(s, SparkEntry.VerifyJsonRecords)),
+    "minhash_pairs" -> ((s, d) => ops.DedupOps.minhashPairs(s, d)),
+    // per-doc MinHash band keys: the q23 oracle must apply the SAME
+    // band-agreement predicate as the engine's candidate generation —
+    // an exact all-(lang,bucket)-pairs oracle would list pairs the
+    // (one-sided-probabilistic) prefilter is allowed to miss
+    "bands" -> ((s, d) => {
+      import s.implicits._
+      s.read.parquet(s"$d/documents.parquet")
+        .select(col("doc_id"), col("text")).as[(Long, String)]
+        .flatMap { case (id, t) =>
+          val sh = text.TextAlgos.shingleHashes(
+            text.TextAlgos.tokenize(t), ops.DedupOps.ShingleW)
+          if (sh.isEmpty) Iterator.empty
+          else text.TextAlgos.bandKeys(
+            text.TextAlgos.minhash(sh, ops.DedupOps.MinhashK), ops.DedupOps.LshBands)
+            .iterator.map(bk => (id, bk))
+        }
+        .toDF("doc_id", "band_key")
+    }),
+    "simhash" -> ((s, d) => ops.TextOps.simhashDf(s, d)),
+    "grams" -> ((s, d) => {
+      import s.implicits._
+      s.read.parquet(s"$d/documents.parquet")
+        .select(col("doc_id"), col("text")).as[(Long, String)]
+        .map { case (id, t) =>
+          (id, text.TextAlgos.shingleHashesOrdered(
+            text.TextAlgos.tokenize(t), ops.TextOps.WinnowK))
+        }
+        .toDF("doc_id", "grams")
+    }),
+    // IVF coarse centroids for the q54 oracle: exact fixed-point Lloyd
+    // training is bit-deterministic at any parallelism, so this
+    // materialization equals the centroids q54 recomputes in-query;
+    // DuckDB independently recomputes assignment + probe + search.
+    "centroids" -> ((s, d) => ops.SimilarityOps.ivfCentroids(s, d)),
+    // frozen BASE-subset centroids for the q187 append-path oracle
+    "centroids_base" -> ((s, d) =>
+      ops.SimilarityOps.ivfCentroidsOf(
+        s.read.parquet(s"$d/embeddings.parquet")
+          .select(col("vec_id"), col("embedding"))
+          .filter(col("vec_id") < ops.SimilarityOps.IvfAppendBase)))
+  )
+
+  /** The specs whose oracle reads `__SYNTH__/<table>.parquet`. */
+  private def readers(table: String): Seq[String] = SparkEntry.specs.collect {
+    case QuerySpec(name, _, QuerySpec.Oracle(sql)) if sql.contains(s"__SYNTH__/$table.parquet") => name
+  }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name filter (local
     // iteration only — the driver always runs the full surface)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
+    val unknown = only.getOrElse(Set.empty).filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[verify] unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
     def keep(name: String): Boolean = only.forall(_.contains(name))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -37,187 +137,13 @@ object Verify {
     // One try per synth table so a single failed write is attributed to
     // the queries it feeds, instead of surfacing later as an opaque
     // missing-file error in the DuckDB compare.
-    def synthWrite(label: String, affects: String)(body: => Unit): Unit =
-      try body catch { case e: Throwable =>
-        System.err.println(s"[verify] synth $label failed (affects $affects): ${e.getMessage}")
+    synthTables.foreach { case (name, build) =>
+      try build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$synthDir/$name.parquet")
+      catch { case e: Throwable =>
+        System.err.println(
+          s"[verify] synth $name failed (affects ${readers(name).mkString(", ")}): ${e.getMessage}")
       }
-    {
-      import spark.implicits._
-      synthWrite("golden_turns", "extraction-family oracles") {
-        synth.SynthDataset.golden(spark, SparkEntry.VerifyConvs)
-          .toDF().coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/golden_turns.parquet")
-      }
-      synthWrite("records", "shred-family oracles") {
-        ops.ShredOps.structuredRecords(spark, SparkEntry.VerifyRecords)
-          .toDF().coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/records.parquet")
-      }
-      synthWrite("web_docs", "q61/q62/q67") {
-        synth.WebDocs.docs(spark, SparkEntry.VerifyWebDocs)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/web_docs.parquet")
-      }
-      synthWrite("golden_spans", "q121 span-offset oracle (exploded from the generator's by-construction span layout)") {
-        synth.SynthDataset.golden(spark, SparkEntry.VerifyConvs)
-          .toDF()
-          .select(col("conv_id"), col("turn_idx"), posexplode(col("expected_spans")))
-          .select(col("conv_id"), col("turn_idx"),
-            col("pos").cast("int").as("span_idx"),
-            col("col").getField("kind").as("span_kind"),
-            col("col").getField("start").as("span_start"),
-            col("col").getField("end").as("span_end"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/golden_spans.parquet")
-      }
-      synthWrite("retry_turns", "q116-q118 conversation-redundancy oracles") {
-        synth.RetryCorpus.turns(spark, SparkEntry.VerifyRetryConvs)
-          .toDF().coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/retry_turns.parquet")
-      }
-      synthWrite("domain_docs", "q132 DSIR-selection oracle") {
-        synth.DomainDocs.docs(spark, SparkEntry.VerifyDomainDocs)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/domain_docs.parquet")
-      }
-      synthWrite("golden_cells", "q133 table-extraction oracle (generator's by-construction cells)") {
-        synth.TableDocs.goldenCells(spark, SparkEntry.VerifyTableDocs)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/golden_cells.parquet")
-      }
-      synthWrite("golden_links", "q136 link-extraction oracle (generator's by-construction links)") {
-        synth.TableDocs.goldenLinks(spark, SparkEntry.VerifyTableDocs)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/golden_links.parquet")
-      }
-      synthWrite("golden_sections", "q137/q138 outline oracle (generator's by-construction sections)") {
-        synth.OutlineDocs.goldenSections(spark, SparkEntry.VerifyOutlineDocs)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/golden_sections.parquet")
-      }
-      synthWrite("md_golden_cells", "q135 markdown-table oracle (generator's by-construction cells)") {
-        synth.MdTableDocs.goldenCells(spark, SparkEntry.VerifyMdTableDocs)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/md_golden_cells.parquet")
-      }
-      synthWrite("golden_md_links", "q151 markdown-link oracle (generator's by-construction links)") {
-        synth.OutlineDocs.goldenMdLinks(spark, SparkEntry.VerifyOutlineDocs)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/golden_md_links.parquet")
-      }
-      synthWrite("golden_section_bodies", "q150 markdown section-body oracle (generator's by-construction bodies)") {
-        synth.OutlineDocs.goldenBodies(spark, SparkEntry.VerifyOutlineDocs)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/golden_section_bodies.parquet")
-      }
-      synthWrite("golden_grid_cells", "q145 pdfir grid oracle (generator's by-construction cells)") {
-        synth.PdfGridDocs.goldenCells(spark, SparkEntry.VerifyPdfGridDocs)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/golden_grid_cells.parquet")
-      }
-      synthWrite("golden_jitter_cells", "q155 jittered-grid oracle (generator's by-construction cells)") {
-        synth.PdfGridDocs.goldenJitterCells(spark, SparkEntry.VerifyPdfGridDocs)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/golden_jitter_cells.parquet")
-      }
-      synthWrite("noisy_docs", "q142 encoding-audit oracle (planted encoding damage)") {
-        synth.NoisyDocs.docs(spark, SparkEntry.VerifyNoisyDocs)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/noisy_docs.parquet")
-      }
-      synthWrite("nfc_docs", "q172 NFC-audit oracle (planted normalization forms)") {
-        synth.NfcDocs.docs(spark, SparkEntry.VerifyNfcDocs)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/nfc_docs.parquet")
-      }
-      synthWrite("hyphen_docs", "q181 dehyphenation oracle (planted line-break wraps)") {
-        synth.HyphenDocs.docs(spark, SparkEntry.VerifyNfcDocs)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/hyphen_docs.parquet")
-      }
-      synthWrite("norm_pair_docs", "q186 normalization-dedup oracle (planted twins)") {
-        synth.NormPairDocs.docs(spark, SparkEntry.VerifyNfcDocs)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/norm_pair_docs.parquet")
-      }
-      synthWrite("pdf_golden", "q192 real-PDF container oracle (generator's by-construction reading order)") {
-        synth.PdfDocs.golden(spark, SparkEntry.VerifyPdfDocs)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/pdf_golden.parquet")
-      }
-      synthWrite("pdf_golden_runs", "q195 rasterization oracle (the layout plan's positioned runs)") {
-        synth.PdfDocs.goldenRuns(spark, SparkEntry.VerifyPdfDocs)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/pdf_golden_runs.parquet")
-      }
-      synthWrite("conv_buckets", "q194 time-travel oracle (the store's conv->bucket assignment; xxhash64 has no DuckDB equivalent, so the map materializes and the oracle verifies the DOWNSTREAM snapshot algebra — the q18/q22/q36 pattern)") {
-        synth.SynthDataset.turns(spark, SparkEntry.VerifyConvs)
-          .select(col("conv_id")).distinct()
-          .select(col("conv_id"),
-            org.apache.spark.sql.functions.pmod(
-              org.apache.spark.sql.functions.xxhash64(col("conv_id")),
-              org.apache.spark.sql.functions.lit(SparkEntry.TtBuckets.toLong)).cast("int").as("bucket"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/conv_buckets.parquet")
-      }
-      synthWrite("json_records", "q69") {
-        synth.JsonRecords.docs(spark, SparkEntry.VerifyJsonRecords)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$synthDir/json_records.parquet")
-      }
-    }
-    // sf-dir-dependent intermediates: the engine's minhash pair list,
-    // simhash values and ordered winnow grams. Their inner hash
-    // (splitmix64) has no DuckDB equivalent, so the oracles for
-    // q18/q22/q36 verify the DOWNSTREAM algorithms (winnow window-min,
-    // Hamming blocking, connected components) over these materialized
-    // values instead; the hash production itself is covered by
-    // local-truth ScalaTests (OpsSpec/TextAlgosSpec/FunctionsSpec).
-    try {
-      import spark.implicits._
-      import org.apache.spark.sql.functions.col
-      ops.DedupOps.minhashPairs(spark, sfDir).coalesce(1)
-        .write.mode("overwrite").parquet(s"$synthDir/minhash_pairs.parquet")
-      // per-doc MinHash band keys: the q23 oracle must apply the SAME
-      // band-agreement predicate as the engine's candidate generation —
-      // an exact all-(lang,bucket)-pairs oracle would list pairs the
-      // (one-sided-probabilistic) prefilter is allowed to miss
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .flatMap { case (id, t) =>
-          val sh = text.TextAlgos.shingleHashes(
-            text.TextAlgos.tokenize(t), ops.DedupOps.ShingleW)
-          if (sh.isEmpty) Iterator.empty
-          else text.TextAlgos.bandKeys(
-            text.TextAlgos.minhash(sh, ops.DedupOps.MinhashK), ops.DedupOps.LshBands)
-            .iterator.map(bk => (id, bk))
-        }
-        .toDF("doc_id", "band_key").coalesce(1)
-        .write.mode("overwrite").parquet(s"$synthDir/bands.parquet")
-      ops.TextOps.simhashDf(spark, sfDir).coalesce(1)
-        .write.mode("overwrite").parquet(s"$synthDir/simhash.parquet")
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, t) =>
-          (id, text.TextAlgos.shingleHashesOrdered(
-            text.TextAlgos.tokenize(t), ops.TextOps.WinnowK))
-        }
-        .toDF("doc_id", "grams").coalesce(1)
-        .write.mode("overwrite").parquet(s"$synthDir/grams.parquet")
-      // IVF coarse centroids for the q54 oracle: exact fixed-point Lloyd
-      // training is bit-deterministic at any parallelism, so this
-      // materialization equals the centroids q54 recomputes in-query;
-      // DuckDB independently recomputes assignment + probe + search.
-      ops.SimilarityOps.ivfCentroids(spark, sfDir).coalesce(1)
-        .write.mode("overwrite").parquet(s"$synthDir/centroids.parquet")
-      // frozen BASE-subset centroids for the q187 append-path oracle
-      ops.SimilarityOps.ivfCentroidsOf(
-        spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select(col("vec_id"), col("embedding"))
-          .filter(col("vec_id") < ops.SimilarityOps.IvfAppendBase)).coalesce(1)
-        .write.mode("overwrite").parquet(s"$synthDir/centroids_base.parquet")
-    } catch { case e: Throwable =>
-      System.err.println(s"[verify] intermediate materialization failed: ${e.getMessage}")
     }
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

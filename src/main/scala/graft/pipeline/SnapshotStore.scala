@@ -90,26 +90,29 @@ final class SnapshotStore(root: String, nBuckets: Int) {
   }
 
   /** Immutable per-commit manifest copies (`_manifest.v<N>.json`, N
-    * monotone from 1) — the Iceberg snapshot-log emulation behind the
+    * gapless from 1) — the Iceberg snapshot-log emulation behind the
     * time-travel readers below. `_manifest.json` stays the current
-    * pointer; each commit ALSO freezes its state under the next version
-    * number, so any historical completed-bucket set can be re-read.
+    * pointer and holds the last committed version; each commit ALSO
+    * freezes its state under the next version number, so any historical
+    * completed-bucket set can be re-read.
     */
-  def snapshotVersions(): Seq[Int] = {
-    val dir = Paths.get(root)
-    if (!Files.exists(dir)) return Seq.empty
-    val re = "^_manifest\\.v(\\d+)\\.json$".r
-    scala.util.Using.resource(Files.list(dir)) { st =>
-      st.iterator().asScala
-        .flatMap(p => re.findFirstMatchIn(p.getFileName.toString).map(_.group(1).toInt))
-        .toSeq.sorted
+  def snapshotVersions(): Seq[Int] = 1 to lastVersion()
+
+  /** The version counter from the pointer manifest; 0 when there is no
+    * manifest. A v-file past it is an orphan of a crash before the
+    * pointer moved: it is never listed, and the next commit overwrites it.
+    */
+  private def lastVersion(): Int =
+    if (!Files.exists(manifestPath)) 0
+    else {
+      val s = new String(Files.readAllBytes(manifestPath), StandardCharsets.UTF_8)
+      """"version"\s*:\s*(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt).getOrElse(0)
     }
-  }
 
   /** The completed-bucket set frozen at snapshot `version`. */
   def completedBucketsAsOf(version: Int): Set[Int] = {
     val p = Paths.get(s"$root/_manifest.v$version.json")
-    if (!Files.exists(p)) return Set.empty
+    if (version < 1 || version > lastVersion() || !Files.exists(p)) return Set.empty
     val str = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
     val re = ("\"completed\":\\[([0-9,]*)\\]").r
     re.findFirstMatchIn(str)
@@ -134,14 +137,13 @@ final class SnapshotStore(root: String, nBuckets: Int) {
       completed: Set[Int], batchIds: Set[Int], inputSnapshot: String, ddl: String): Unit = {
     Files.createDirectories(Paths.get(root))
     val ddlJson = ddl.replace("\\", "\\\\").replace("\"", "\\\"")
+    val version = lastVersion() + 1
     val json =
-      s"""{"input_snapshot":"$inputSnapshot","n_buckets":$nBuckets,"schema_ddl":"$ddlJson","completed":[${completed.toSeq.sorted.mkString(",")}],"batches":[${batchIds.toSeq.sorted.mkString(",")}]}"""
+      s"""{"version":$version,"input_snapshot":"$inputSnapshot","n_buckets":$nBuckets,"schema_ddl":"$ddlJson","completed":[${completed.toSeq.sorted.mkString(",")}],"batches":[${batchIds.toSeq.sorted.mkString(",")}]}"""
     // the frozen snapshot copy gets the SAME temp+atomic-rename
     // discipline as the current pointer: a crash can never leave a
-    // truncated version file (a stale complete v-file from a crash
-    // before the pointer move just becomes a duplicate of the re-run
-    // commit's state — correct reads, never wrong ones)
-    val version = snapshotVersions().lastOption.getOrElse(0) + 1
+    // truncated version file, and a complete v-file from a crash before
+    // the pointer move is re-allocated (overwritten) by the re-run commit
     val vTmp = Paths.get(s"$root/_manifest.v$version.json.tmp")
     Files.write(vTmp, json.getBytes(StandardCharsets.UTF_8))
     Files.move(vTmp, Paths.get(s"$root/_manifest.v$version.json"),

@@ -55,6 +55,18 @@ class PdfContainerSpec extends AnyFunSuite {
     }
   }
 
+  test("q193 dedup: two corrupt containers and one good document form three groups") {
+    val spark = SparkSessionFixture.spark
+    import spark.implicits._
+    val bytes = (s: String) => s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+    val docs = Seq(
+      1L -> bytes("not a pdf"), 2L -> bytes("also not a pdf"), 3L -> bytes(PdfDocs.pdf(3L))
+    ).toDF("doc_id", "pdf")
+    val groups = SparkEntry.pdfProducerDedup(docs)
+      .select($"keep_id", $"n_copies").as[(Long, Long)].collect().sorted.toSeq
+    assert(groups == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L))
+  }
+
   test("truncation fuzz: every prefix parses to a failure class or a clean result, never throws") {
     (0L until 20L).foreach { id =>
       val pdf = PdfDocs.pdf(id)

@@ -53,6 +53,20 @@ class PdfRasterizerSpec extends AnyFunSuite {
     }
   }
 
+  // q195's oracle derives rows only from lit pixels, while the engine
+  // emits one row per rasterized page: the two agree only while every
+  // page of the verify corpus carries ink
+  test("every page of the verify corpus rasterizes with ink (the q195 engine/oracle coupling)") {
+    (0L until SparkEntry.VerifyPdfDocs).foreach { id =>
+      val doc = parsed(id)
+      val pages = PdfRasterizer.rasterize(doc, dpi = 72)
+      assert(pages.map(_.page) == doc.pageHeights.indices, s"doc $id page set")
+      pages.foreach { pb =>
+        assert(PdfRasterizer.inkStats(pb)._1 > 0, s"doc $id page ${pb.page} has no ink")
+      }
+    }
+  }
+
   test("reference dpi factors: 600 and 300 scale exactly by the floor-div span rule") {
     def spanInk(id: Long, dpi: Int): Map[Int, Long] =
       litPoints(id).groupBy(_._1).map { case (page, pts) =>

@@ -5,7 +5,7 @@ import graft.pipeline.{Pipeline, SnapshotStore}
 import graft.synth.{Synth, SynthDataset}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 class PipelineSpec extends AnyFunSuite {
 
@@ -285,6 +285,25 @@ class PipelineSpec extends AnyFunSuite {
     val plan = store.readExtractedAsOf(spark, 1).queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(plan).isDefined,
       s"as-of read must prune bucket partitions:\n$plan")
+    turns.unpersist()
+  }
+
+  test("resume over an orphaned version file keeps versions gapless and as-of sets crash-free") {
+    val turns = SynthDataset.turns(spark, 40L).cache()
+    def asOf(store: SnapshotStore) = store.snapshotVersions().map(v => v -> store.completedBucketsAsOf(v))
+    val clean = new SnapshotStore(Files.createTempDirectory("graft-ver-clean").toString, nBuckets = 8)
+    clean.process(spark, turns, "snap-1", bucketsPerBatch = 3)
+    val root = Files.createTempDirectory("graft-ver-orphan").toString
+    val store = new SnapshotStore(root, nBuckets = 8)
+    intercept[RuntimeException] {
+      store.process(spark, turns, "snap-1", bucketsPerBatch = 3, failAfterBatches = Some(2))
+    }
+    // a crash between freezing a v-file and moving the pointer leaves an
+    // orphan one past the pointer's version (here a stale copy of v2)
+    Files.copy(Paths.get(s"$root/_manifest.v2.json"), Paths.get(s"$root/_manifest.v3.json"))
+    store.process(spark, turns, "snap-1", bucketsPerBatch = 3)
+    assert(store.snapshotVersions() == Seq(1, 2, 3))
+    assert(asOf(store) == asOf(clean))
     turns.unpersist()
   }
 
