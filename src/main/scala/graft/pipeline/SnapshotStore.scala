@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import graft.model.Turn
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import graft.model.{LineageRow, Turn}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructType}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
@@ -53,7 +54,7 @@ final class SnapshotStore(root: String, nBuckets: Int) {
     else {
       val s = new String(Files.readAllBytes(manifestPath), StandardCharsets.UTF_8)
       """"schema_ddl"\s*:\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(s)
-        .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
+        .map(g => SnapshotStore.jsonUnescape(g.group(1)))
         .filter(_.nonEmpty)
     }
 
@@ -136,10 +137,10 @@ final class SnapshotStore(root: String, nBuckets: Int) {
   private def writeManifest(
       completed: Set[Int], batchIds: Set[Int], inputSnapshot: String, ddl: String): Unit = {
     Files.createDirectories(Paths.get(root))
-    val ddlJson = ddl.replace("\\", "\\\\").replace("\"", "\\\"")
+    import SnapshotStore.jsonString
     val version = lastVersion() + 1
     val json =
-      s"""{"version":$version,"input_snapshot":"$inputSnapshot","n_buckets":$nBuckets,"schema_ddl":"$ddlJson","completed":[${completed.toSeq.sorted.mkString(",")}],"batches":[${batchIds.toSeq.sorted.mkString(",")}]}"""
+      s"""{"version":$version,"input_snapshot":${jsonString(inputSnapshot)},"n_buckets":$nBuckets,"schema_ddl":${jsonString(ddl)},"completed":[${completed.toSeq.sorted.mkString(",")}],"batches":[${batchIds.toSeq.sorted.mkString(",")}]}"""
     // the frozen snapshot copy gets the SAME temp+atomic-rename
     // discipline as the current pointer: a crash can never leave a
     // truncated version file, and a complete v-file from a crash before
@@ -184,7 +185,6 @@ final class SnapshotStore(root: String, nBuckets: Int) {
       failAfterBatches: Option[Int] = None
   ): Int = {
     import spark.implicits._
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     var completed = completedBuckets()
     var batchIds = completedBatchIds()
     dropStaleLineage(batchIds)
@@ -203,25 +203,18 @@ final class SnapshotStore(root: String, nBuckets: Int) {
         Pipeline.runWithLineage(spark, slice, inputSnapshot)
       val withBucket = extracted
         .withColumn("bucket", pmod(xxhash64($"conv_id"), lit(nBuckets.toLong)).cast("int"))
+      // dynamic overwrite per write, never on the shared session: only
+      // this batch's bucket partitions are replaced
       withBucket
         .write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
         .parquet(dataDir)
-      // persist the schema AS STORED (footer-only read): parquet read-back
-      // normalizes nested nullability, so the written plan's schema would
-      // not round-trip for a reader
-      val ddl = spark.read.parquet(dataDir).schema.toDDL
-      // lineage is keyed by batch and written with dynamic partition
-      // overwrite (same idempotency model as the data): a crash between
-      // this write and the manifest update re-runs the batch, which
-      // REPLACES its lineage partition instead of appending a duplicate
+      // the schema AS STORED, derived from the plan: a parquet read-back
+      // would cost a directory listing and a footer job per batch
+      val ddl = SnapshotStore.asStored(withBucket.schema).toDDL
       val rows = lineage()
-      if (rows.nonEmpty)
-        spark.createDataset(rows)
-          .withColumn("batch_id", lit(batch.min))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("batch_id")
-          .parquet(lineageDir)
+      if (rows.nonEmpty) writeLineage(batch.min, rows)
       completed = completed ++ batch
       batchIds = batchIds + batch.min
       writeManifest(completed, batchIds, inputSnapshot, ddl)
@@ -230,6 +223,63 @@ final class SnapshotStore(root: String, nBuckets: Int) {
     batches
   }
 
+  /** The batch's lineage rows, already on the driver, as one JSON-lines
+    * file `batch_id=<id>/part-00000.json`, written without a Spark job. A
+    * crash between this write and the manifest update re-runs the batch,
+    * which REPLACES the file instead of appending a duplicate. The temp
+    * name starts with `.`, so Spark's file listing never reads a temp
+    * file a crash left behind.
+    */
+  private def writeLineage(batchId: Int, rows: Seq[LineageRow]): Unit = {
+    import SnapshotStore.jsonString
+    val dir = Files.createDirectories(Paths.get(s"$lineageDir/batch_id=$batchId"))
+    val lines = rows.map(r =>
+      s"""{"partition_id":${r.partition_id},"input_snapshot":${jsonString(r.input_snapshot)},"turn_count":${r.turn_count},"failure_count":${r.failure_count},"bytes_processed":${r.bytes_processed}}""")
+    val tmp = dir.resolve(".part-00000.json.tmp")
+    Files.write(tmp, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, dir.resolve("part-00000.json"),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
   def readExtracted(spark: SparkSession): DataFrame = spark.read.parquet(dataDir)
-  def readLineage(spark: SparkSession): DataFrame = spark.read.parquet(lineageDir)
+  def readLineage(spark: SparkSession): DataFrame =
+    spark.read.schema(SnapshotStore.LineageSchema).json(lineageDir)
+}
+
+object SnapshotStore {
+
+  /** `t` as Spark's parquet writer stores it: every field, array element
+    * and map value nullable, at every depth. */
+  private def asStored(t: StructType): StructType = {
+    def nullable(d: DataType): DataType = d match {
+      case s: StructType => asStored(s)
+      case a: ArrayType  => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType    => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+      case other         => other
+    }
+    StructType(t.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+  }
+
+  /** The lineage table's columns: the `LineageRow` fields, then the
+    * `batch_id` partition column. */
+  private val LineageSchema: StructType =
+    asStored(Encoders.product[LineageRow].schema.add("batch_id", IntegerType))
+
+  /** `s` as a quoted JSON string: `"`, `\` and control characters escaped. */
+  private def jsonString(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"'          => b ++= "\\\""
+      case '\\'         => b ++= "\\\\"
+      case c if c < ' ' => b ++= "\\u%04x".format(c.toInt)
+      case c            => b += c
+    }
+    (b += '"').toString
+  }
+
+  /** Inverse of [[jsonString]] on the text between the quotes. */
+  private def jsonUnescape(s: String): String =
+    """\\(?:u([0-9a-fA-F]{4})|(.))""".r.replaceAllIn(s, m =>
+      scala.util.matching.Regex.quoteReplacement(
+        Option(m.group(1)).fold(m.group(2))(h => Integer.parseInt(h, 16).toChar.toString)))
 }

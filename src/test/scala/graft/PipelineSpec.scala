@@ -91,13 +91,13 @@ class PipelineSpec extends AnyFunSuite {
     val lineageTotal = store.readLineage(spark).agg(sum($"turn_count")).as[Long].head()
     assert(lineageTotal == turns.count())
 
-    // S11: the manifest persists the written schema as parseable DDL
+    // S11: the manifest persists the schema exactly as a parquet reader
+    // sees it, nested span struct and nullability included
     val ddl = store.schemaDdl().getOrElse(fail("schema_ddl missing from manifest"))
-    val persisted = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-    val onDisk = store.readExtracted(spark).schema
-    assert(persisted.fields.map(f => (f.name, f.dataType)).toSeq ==
-      onDisk.fields.map(f => (f.name, f.dataType)).toSeq,
-      s"persisted DDL != on-disk schema:\n$ddl\nvs\n${onDisk.toDDL}")
+    val onDisk = store.readExtracted(spark).schema.toDDL
+    assert(ddl == onDisk, s"persisted DDL != on-disk schema:\n$ddl\nvs\n$onDisk")
+    assert(ddl.contains("spans ARRAY<STRUCT<"), ddl)
+    assert(org.apache.spark.sql.types.StructType.fromDDL(ddl).toDDL == ddl)
     turns.unpersist()
   }
 
@@ -318,14 +318,126 @@ class PipelineSpec extends AnyFunSuite {
     // simulate a crash that happened AFTER a lineage write but BEFORE the
     // manifest update: a lineage partition for a batch id the manifest
     // never registered, with an absurd turn count
-    spark.createDataset(Seq(graft.model.LineageRow(0, "snap-1", 999999L, 0L, 0L)))
-      .withColumn("batch_id", lit(6))
-      .write.partitionBy("batch_id").mode("append").parquet(s"$root/lineage")
+    plantLineage(root, batchId = 6, "part-00000.json")
+    assert(store.readLineage(spark).filter($"turn_count" === 999999L).count() == 1,
+      "the planted stale partition must be readable, or this test shows nothing")
     // resume with a DIFFERENT grouping, so no new batch id overwrites 6
     new SnapshotStore(root, nBuckets = 8).process(spark, turns, "snap-1", bucketsPerBatch = 4)
     val lineage = new SnapshotStore(root, nBuckets = 8).readLineage(spark)
     assert(lineage.filter($"turn_count" === 999999L).count() == 0, "stale lineage survived resume")
     assert(lineage.agg(sum($"turn_count")).as[Long].head() == turns.count())
+    turns.unpersist()
+  }
+  /** One lineage row with an absurd turn count, written as the driver
+    * writes lineage: a JSON-lines file under `batch_id=<id>`. */
+  private def plantLineage(root: String, batchId: Int, name: String): Unit = {
+    val dir = Files.createDirectories(Paths.get(s"$root/lineage/batch_id=$batchId"))
+    Files.write(dir.resolve(name),
+      """{"partition_id":0,"input_snapshot":"snap-1","turn_count":999999,"failure_count":0,"bytes_processed":0}
+        |""".stripMargin.getBytes("UTF-8"))
+  }
+
+  test("a lineage temp file left by a crash before its rename is never read") {
+    import spark.implicits._
+    val turns = SynthDataset.turns(spark, 20L).cache()
+    val root = Files.createTempDirectory("graft-lineage-tmp").toString
+    val store = new SnapshotStore(root, nBuckets = 8)
+    store.process(spark, turns, "snap-1", bucketsPerBatch = 4)
+    val registered = store.completedBatchIds().min
+    // the writer's temp name, beside the registered batch's renamed file
+    plantLineage(root, registered, ".part-00000.json.tmp")
+    assert(store.readLineage(spark).agg(sum($"turn_count")).as[Long].head() == turns.count())
+    turns.unpersist()
+  }
+
+  test("snapshot ids with quotes, backslashes and newlines round-trip through manifest and lineage") {
+    import spark.implicits._
+    val turns = SynthDataset.turns(spark, 20L).cache()
+    val root = Files.createTempDirectory("graft-escape").toString
+    val store = new SnapshotStore(root, nBuckets = 8)
+    val snapshot = "a\"b\\c\nd"
+    store.process(spark, turns, snapshot, bucketsPerBatch = 4)
+    assert(store.completedBuckets() == (0 until 8).toSet)
+    val manifest = new String(Files.readAllBytes(Paths.get(s"$root/_manifest.json")), "UTF-8")
+    assert(spark.read.json(Seq(manifest).toDS()).select($"input_snapshot").as[String].collect()
+      .toSeq == Seq(snapshot), s"the manifest must stay one valid JSON line:\n$manifest")
+    assert(store.schemaDdl().contains(store.readExtracted(spark).schema.toDDL))
+    val lineage = store.readLineage(spark)
+    assert(lineage.schema.toDDL == "partition_id INT,input_snapshot STRING,turn_count BIGINT," +
+      "failure_count BIGINT,bytes_processed BIGINT,batch_id INT")
+    assert(lineage.select($"input_snapshot").distinct().as[String].collect().toSeq == Seq(snapshot))
+    assert(lineage.agg(sum($"turn_count")).as[Long].head() == turns.count())
+    turns.unpersist()
+  }
+
+  test("process leaves the session's partitionOverwriteMode alone and still overwrites per bucket") {
+    import spark.implicits._
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val turns = SynthDataset.turns(spark, 20L).cache()
+    val store = new SnapshotStore(Files.createTempDirectory("graft-conf").toString, nBuckets = 8)
+    spark.conf.set(key, "static")
+    try {
+      store.process(spark, turns, "snap-1", bucketsPerBatch = 4)
+      assert(spark.conf.get(key) == "static")
+    } finally spark.conf.unset(key)
+    // the second batch's write replaced only its own buckets
+    val out = store.readExtracted(spark)
+    assert(out.select($"bucket").as[Int].collect().map(_ / 4).toSet == Set(0, 1))
+    assert(out.count() == turns.count())
+    turns.unpersist()
+  }
+
+  /** Spark jobs started by `body`, counted under a fresh job group. A
+    * sentinel job in another group runs after `body`: listener events
+    * arrive in order, so once its end is seen every job of `body` is. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${System.nanoTime()}"
+    val sentinel = s"$group-sentinel"
+    val started = new AtomicInteger
+    val sentinelJob = new AtomicInteger(-1)
+    val sentinelEnded = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group`    => started.incrementAndGet()
+          case `sentinel` => sentinelJob.set(e.jobId)
+          case _          =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinelJob.get) sentinelEnded.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(sentinel, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinelEnded.await(60, TimeUnit.SECONDS), "the sentinel job's end never arrived")
+      started.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a one-batch process starts no Spark job beyond its data write's") {
+    import spark.implicits._
+    val turns = SynthDataset.turns(spark, 20L).cache()
+    turns.count()
+    val store = new SnapshotStore(Files.createTempDirectory("graft-jobs").toString, nBuckets = 8)
+    val processJobs = jobsStartedBy(store.process(spark, turns, "snap-1", bucketsPerBatch = 8))
+    val writeJobs = jobsStartedBy {
+      Pipeline.runWithLineage(spark, turns, "snap-1")._1
+        .withColumn("bucket", pmod(xxhash64($"conv_id"), lit(8L)).cast("int"))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket").parquet(Files.createTempDirectory("graft-jobs-write").toString)
+    }
+    assert(writeJobs > 0)
+    assert(processJobs == writeJobs, s"process started $processJobs jobs, its data write alone $writeJobs")
     turns.unpersist()
   }
 }
