@@ -116,23 +116,31 @@ object SparkEntry {
     * concurrent JVMs on one host must not wipe each other's live trees)
     * and a sha-derived input tag (String.hashCode collisions must not
     * alias two inputs). A file that vanishes mid-wipe is already gone:
-    * the wipe walks again until the dir itself is gone.
+    * the wipe walks again until the dir itself is gone. A sibling keyed by
+    * a pid that is no longer alive belongs to a JVM that has exited and is
+    * wiped too; a live pid, reused or not, is left alone.
     */
-  private def scratchDir(query: String, input: String): String = {
+  private[graft] def scratchDir(query: String, input: String): String = {
     import java.nio.file.{Files, NoSuchFileException, Paths}
     import scala.jdk.CollectionConverters._
     val tag = java.security.MessageDigest.getInstance("SHA-256")
       .digest(input.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
     val pid = java.lang.ProcessHandle.current().pid()
-    val p = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_scratch_${System.getProperty("user.name")}", s"${query}_${tag}_p$pid")
-    while (Files.exists(p))
-      try scala.util.Using.resource(Files.walk(p)) { st =>
-        st.sorted(java.util.Comparator.reverseOrder()).iterator().asScala.foreach(Files.deleteIfExists)
-      } catch {
-        case _: NoSuchFileException =>
-        case e: java.io.UncheckedIOException if e.getCause.isInstanceOf[NoSuchFileException] =>
-      }
+    val root = Paths.get(System.getProperty("java.io.tmpdir"), s"graft_scratch_${System.getProperty("user.name")}")
+    val p = root.resolve(s"${query}_${tag}_p$pid")
+    val exited = if (!Files.isDirectory(root)) Nil
+      else scala.util.Using.resource(Files.list(root))(_.iterator().asScala.toList).filter(d =>
+        "_p(\\d+)$".r.findFirstMatchIn(d.getFileName.toString)
+          .flatMap(_.group(1).toLongOption).exists(!java.lang.ProcessHandle.of(_).isPresent))
+    (exited :+ p).foreach { d =>
+      while (Files.exists(d))
+        try scala.util.Using.resource(Files.walk(d)) { st =>
+          st.sorted(java.util.Comparator.reverseOrder()).iterator().asScala.foreach(Files.deleteIfExists)
+        } catch {
+          case _: NoSuchFileException =>
+          case e: java.io.UncheckedIOException if e.getCause.isInstanceOf[NoSuchFileException] =>
+        }
+    }
     Files.createDirectories(p)
     p.toString
   }

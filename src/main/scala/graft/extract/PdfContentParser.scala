@@ -49,10 +49,13 @@ object PdfContentParser {
     val objRe = java.util.regex.Pattern.compile("(\\d+)\\s+\\d+\\s+obj\\b")
     val m = objRe.matcher(s)
     var searchFrom = 0
+    // first "stream" at or after bodyStart (-1: none left), advanced
+    // lazily so stream-less objects never rescan the rest of the file
+    var streamAt = s.indexOf("stream")
     while (m.find(searchFrom)) {
       val num = m.group(1).toInt
       val bodyStart = m.end()
-      val streamAt = s.indexOf("stream", bodyStart)
+      if (streamAt >= 0 && streamAt < bodyStart) streamAt = s.indexOf("stream", bodyStart)
       val endobjAt = s.indexOf("endobj", bodyStart)
       if (endobjAt < 0) return Left("pdf_object")
       if (streamAt >= 0 && streamAt < endobjAt) {

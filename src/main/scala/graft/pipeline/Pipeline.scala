@@ -165,15 +165,18 @@ object Pipeline {
     * prev side's hashes would come from a persisted column, making the
     * diff a pure metadata-scale join.
     */
-  def changedTurnKeys(prev: Dataset[Turn], next: Dataset[Turn]): org.apache.spark.sql.DataFrame = {
-    def keyed(d: Dataset[Turn]) = d.toDF().select(
-      col("conv_id"), col("turn_idx"),
-      sha2(to_json(struct(col("role"), col("text"), col("tool"), col("ts"))), 256)
-        .as("content_sha"))
-    keyed(next)
-      .join(keyed(prev), Seq("conv_id", "turn_idx", "content_sha"), "left_anti")
+  def changedTurnKeys(prev: Dataset[Turn], next: Dataset[Turn]): org.apache.spark.sql.DataFrame =
+    contentKeyed(next, "content_sha")
+      .join(contentKeyed(prev, "content_sha"), Seq("conv_id", "turn_idx", "content_sha"), "left_anti")
       .select(col("conv_id"), col("turn_idx"))
-  }
+
+  /** (conv_id, turn_idx, sha256 of the turn's JSON-serialized payload
+    * fields as `shaCol`) — the content identity [[changedTurnKeys]] and
+    * [[mergeUpsert]] compare. */
+  private def contentKeyed(d: Dataset[Turn], shaCol: String): org.apache.spark.sql.DataFrame =
+    d.toDF().select(
+      col("conv_id"), col("turn_idx"),
+      sha2(to_json(struct(col("role"), col("text"), col("tool"), col("ts"))), 256).as(shaCol))
 
   /** MERGE-INTO semantics over turn snapshots (the lakehouse upsert the
     * S1/S13 snapshot store implies but q71's diff only observes): apply
@@ -193,13 +196,9 @@ object Pipeline {
   def mergeUpsert(
       base: Dataset[Turn],
       upserts: Dataset[Turn],
-      deleteKeys: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    def keyed(d: Dataset[Turn], as: String) = d.toDF().select(
-      col("conv_id"), col("turn_idx"),
-      sha2(to_json(struct(col("role"), col("text"), col("tool"), col("ts"))), 256)
-        .as(as))
-    keyed(base, "base_sha")
-      .join(keyed(upserts, "upsert_sha"), Seq("conv_id", "turn_idx"), "full_outer")
+      deleteKeys: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    contentKeyed(base, "base_sha")
+      .join(contentKeyed(upserts, "upsert_sha"), Seq("conv_id", "turn_idx"), "full_outer")
       .join(deleteKeys.select(col("conv_id"), col("turn_idx")),
         Seq("conv_id", "turn_idx"), "left_anti")
       .select(col("conv_id"), col("turn_idx"),
@@ -207,7 +206,6 @@ object Pipeline {
           .when(col("upsert_sha").isNull, lit("carry"))
           .when(col("upsert_sha") =!= col("base_sha"), lit("update"))
           .otherwise(lit("keep")).as("action"))
-  }
 
   /** Incremental re-ingest between input snapshots: re-extract ONLY the
     * changed/new turns of `next`, reuse `prevExtracted` rows for
@@ -242,9 +240,12 @@ object Pipeline {
   ): Dataset[ExtractedTurn] =
     extractStage(spark, salted(spark, turns, saltBuckets, longConvThreshold))
 
-  /** Pipeline with lineage side-output. The returned thunk yields the
-    * LineageRows observed by completed tasks — call it AFTER an action on
-    * the returned Dataset. Accumulators are at-least-once under task retry;
+  /** Pipeline with lineage side-output: [[run]] plus a per-partition tap
+    * over its output. The returned thunk yields the LineageRows observed
+    * by completed tasks — call it AFTER an action on the returned Dataset.
+    * Each partition's row is emitted when its iterator is exhausted, so
+    * EMPTY partitions get a zero-count row too ("one LineageRow per input
+    * partition"). Accumulators are at-least-once under task retry;
     * `lineage()` dedups by partition id (last write wins), which is exact
     * because the metric values per partition are deterministic.
     */
@@ -258,34 +259,20 @@ object Pipeline {
     import spark.implicits._
     val acc: CollectionAccumulator[LineageRow] =
       spark.sparkContext.collectionAccumulator[LineageRow](s"lineage-$inputSnapshot")
-    val prepared = salted(spark, turns, saltBuckets, longConvThreshold)
-    val out = prepared.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
+    // the tap's MapPartitions sits directly on the extraction's, so
+    // EliminateSerialization leaves no encoder round trip between them
+    val out = run(spark, turns, saltBuckets, longConvThreshold).mapPartitions { it =>
       var turnCount = 0L
       var failureCount = 0L
       var bytes = 0L
-      val mapped = it.map { t =>
-        val e = Extract.turn(t)
+      it.map { e =>
         turnCount += 1
         if (e.failure.isDefined) failureCount += 1
         bytes += e.n_chars_in.toLong
         e
-      }
-      new Iterator[ExtractedTurn] {
-        // emit the partition's lineage row exactly once, when the
-        // consumer observes exhaustion — this also covers EMPTY
-        // partitions (zero-count row), which a next()-side emission
-        // would miss ("one LineageRow per input partition" contract)
-        private var lineageEmitted = false
-        def hasNext: Boolean = {
-          val h = mapped.hasNext
-          if (!h && !lineageEmitted) {
-            acc.add(LineageRow(pid, inputSnapshot, turnCount, failureCount, bytes))
-            lineageEmitted = true
-          }
-          h
-        }
-        def next(): ExtractedTurn = mapped.next()
+      } ++ {
+        acc.add(LineageRow(TaskContext.getPartitionId(), inputSnapshot, turnCount, failureCount, bytes))
+        Iterator.empty
       }
     }
     val lineage = () => {

@@ -4,7 +4,9 @@ import graft.model.{LineageRow, Turn}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructType}
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
@@ -23,25 +25,16 @@ import scala.jdk.CollectionConverters._
   * durably written (temp+rename = atomic on POSIX; SURVEY.md §7.5 risk 7).
   */
 final class SnapshotStore(root: String, nBuckets: Int) {
+  import SnapshotStore.{Json, Manifest, atomicWrite}
 
   private val dataDir = s"$root/data"
   private val lineageDir = s"$root/lineage"
   private val manifestPath = Paths.get(s"$root/_manifest.json")
 
-  private def manifestField(field: String): Set[Int] =
-    if (!Files.exists(manifestPath)) Set.empty
-    else {
-      val s = new String(Files.readAllBytes(manifestPath), StandardCharsets.UTF_8)
-      // manifest format: {"n_buckets":N,"completed":[i,...],"batches":[i,...]}
-      val m = (""""""" + field + """"\s*:\s*\[([^\]]*)\]""").r
-      m.findFirstMatchIn(s) match {
-        case Some(g) if g.group(1).trim.nonEmpty =>
-          g.group(1).split(',').map(_.trim.toInt).toSet
-        case _ => Set.empty
-      }
-    }
+  /** The bucket a turn's conversation belongs to. */
+  private def bucket = pmod(xxhash64(col("conv_id")), lit(nBuckets.toLong)).cast("int")
 
-  def completedBuckets(): Set[Int] = manifestField("completed")
+  def completedBuckets(): Set[Int] = readManifest().fold(Set.empty[Int])(_.completed.toSet)
 
   /** S11: the persisted StructType DDL of the written data (the
     * reference persists its generated schema, ref: agents/sql_agent/
@@ -49,31 +42,13 @@ final class SnapshotStore(root: String, nBuckets: Int) {
     * schema without scanning parquet footers, and makes schema DRIFT
     * between runs observable (compare before overwrite).
     */
-  def schemaDdl(): Option[String] =
-    if (!Files.exists(manifestPath)) None
-    else {
-      val s = new String(Files.readAllBytes(manifestPath), StandardCharsets.UTF_8)
-      """"schema_ddl"\s*:\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(s)
-        .map(g => SnapshotStore.jsonUnescape(g.group(1)))
-        .filter(_.nonEmpty)
-    }
+  def schemaDdl(): Option[String] = readManifest().map(_.schema_ddl).filter(_.nonEmpty)
 
   /** Lineage partition ids (one per completed batch) registered in the
     * manifest — a lineage partition NOT in this set is a stale partial
     * from a crashed run and is removed on the next `process`.
-    *
-    * Migration: a manifest written before the "batches" field existed
-    * must register every on-disk lineage partition, NOT none — otherwise
-    * resuming an old store would delete the lineage of already-completed
-    * batches as "stale".
     */
-  def completedBatchIds(): Set[Int] =
-    if (!Files.exists(manifestPath)) Set.empty
-    else {
-      val s = new String(Files.readAllBytes(manifestPath), StandardCharsets.UTF_8)
-      if (s.contains("\"batches\"")) manifestField("batches")
-      else existingBatchIds()
-    }
+  def completedBatchIds(): Set[Int] = readManifest().fold(Set.empty[Int])(_.batches.toSet)
 
   /** Lineage batch_id=* partitions currently on disk. */
   private def existingBatchIds(): Set[Int] = {
@@ -103,23 +78,14 @@ final class SnapshotStore(root: String, nBuckets: Int) {
     * manifest. A v-file past it is an orphan of a crash before the
     * pointer moved: it is never listed, and the next commit overwrites it.
     */
-  private def lastVersion(): Int =
-    if (!Files.exists(manifestPath)) 0
-    else {
-      val s = new String(Files.readAllBytes(manifestPath), StandardCharsets.UTF_8)
-      """"version"\s*:\s*(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt).getOrElse(0)
-    }
+  private def lastVersion(): Int = readManifest().fold(0)(_.version)
+
+  private def versionPath(version: Int) = Paths.get(s"$root/_manifest.v$version.json")
 
   /** The completed-bucket set frozen at snapshot `version`. */
-  def completedBucketsAsOf(version: Int): Set[Int] = {
-    val p = Paths.get(s"$root/_manifest.v$version.json")
-    if (version < 1 || version > lastVersion() || !Files.exists(p)) return Set.empty
-    val str = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    val re = ("\"completed\":\\[([0-9,]*)\\]").r
-    re.findFirstMatchIn(str)
-      .map(_.group(1).split(",").filter(_.nonEmpty).map(_.toInt).toSet)
-      .getOrElse(Set.empty)
-  }
+  def completedBucketsAsOf(version: Int): Set[Int] =
+    if (version < 1 || version > lastVersion()) Set.empty
+    else readManifest(versionPath(version)).fold(Set.empty[Int])(_.completed.toSet)
 
   /** Time-travel read: the extracted table AS OF snapshot `version` —
     * the data dir is partitioned by bucket and buckets are append-only
@@ -134,24 +100,21 @@ final class SnapshotStore(root: String, nBuckets: Int) {
         .isin(buckets.map(Integer.valueOf): _*))
   }
 
-  private def writeManifest(
-      completed: Set[Int], batchIds: Set[Int], inputSnapshot: String, ddl: String): Unit = {
+  private def readManifest(path: Path = manifestPath): Option[Manifest] =
+    if (!Files.exists(path)) None
+    else Some(Json.readValue(path.toFile, classOf[Manifest]))
+
+  /** Commit `m`: freeze it as `_manifest.v<version>.json`, then move the
+    * pointer. The frozen copy gets the SAME temp+atomic-rename discipline
+    * as the pointer: a crash can never leave a truncated version file,
+    * and a complete v-file from a crash before the pointer move is
+    * re-allocated (overwritten) by the re-run commit.
+    */
+  private def writeManifest(m: Manifest): Unit = {
     Files.createDirectories(Paths.get(root))
-    import SnapshotStore.jsonString
-    val version = lastVersion() + 1
-    val json =
-      s"""{"version":$version,"input_snapshot":${jsonString(inputSnapshot)},"n_buckets":$nBuckets,"schema_ddl":${jsonString(ddl)},"completed":[${completed.toSeq.sorted.mkString(",")}],"batches":[${batchIds.toSeq.sorted.mkString(",")}]}"""
-    // the frozen snapshot copy gets the SAME temp+atomic-rename
-    // discipline as the current pointer: a crash can never leave a
-    // truncated version file, and a complete v-file from a crash before
-    // the pointer move is re-allocated (overwritten) by the re-run commit
-    val vTmp = Paths.get(s"$root/_manifest.v$version.json.tmp")
-    Files.write(vTmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(vTmp, Paths.get(s"$root/_manifest.v$version.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    val tmp = Paths.get(s"$root/_manifest.json.tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    val bytes = Json.writeValueAsBytes(m)
+    atomicWrite(versionPath(m.version), bytes)
+    atomicWrite(manifestPath, bytes)
   }
 
   /** Delete lineage partitions whose batch never registered in the
@@ -184,25 +147,21 @@ final class SnapshotStore(root: String, nBuckets: Int) {
       bucketsPerBatch: Int = 4,
       failAfterBatches: Option[Int] = None
   ): Int = {
-    import spark.implicits._
-    var completed = completedBuckets()
-    var batchIds = completedBatchIds()
-    dropStaleLineage(batchIds)
-    val pending = (0 until nBuckets).filterNot(completed.contains)
+    var manifest = readManifest().getOrElse(Manifest(0, inputSnapshot, nBuckets, "", Nil, Nil))
+    // resuming under another modulus would count the wrong convs as done
+    require(manifest.n_buckets == nBuckets,
+      s"$root was written with ${manifest.n_buckets} buckets, not $nBuckets")
+    dropStaleLineage(manifest.batches.toSet)
+    val pending = (0 until nBuckets).filterNot(manifest.completed.contains)
     var batches = 0
     pending.grouped(bucketsPerBatch).foreach { batch =>
       failAfterBatches.foreach { k =>
         if (batches >= k) throw new RuntimeException(s"simulated kill after $k batches")
       }
-      val slice = turns
-        .withColumn("bucket", pmod(xxhash64($"conv_id"), lit(nBuckets.toLong)).cast("int"))
-        .filter($"bucket".isin(batch: _*))
-        .drop("bucket")
-        .as[Turn]
+      val slice = turns.filter(bucket.isin(batch: _*))
       val (extracted, lineage) =
         Pipeline.runWithLineage(spark, slice, inputSnapshot)
-      val withBucket = extracted
-        .withColumn("bucket", pmod(xxhash64($"conv_id"), lit(nBuckets.toLong)).cast("int"))
+      val withBucket = extracted.withColumn("bucket", bucket)
       // dynamic overwrite per write, never on the shared session: only
       // this batch's bucket partitions are replaced
       withBucket
@@ -210,14 +169,17 @@ final class SnapshotStore(root: String, nBuckets: Int) {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
         .parquet(dataDir)
-      // the schema AS STORED, derived from the plan: a parquet read-back
-      // would cost a directory listing and a footer job per batch
-      val ddl = SnapshotStore.asStored(withBucket.schema).toDDL
       val rows = lineage()
       if (rows.nonEmpty) writeLineage(batch.min, rows)
-      completed = completed ++ batch
-      batchIds = batchIds + batch.min
-      writeManifest(completed, batchIds, inputSnapshot, ddl)
+      manifest = manifest.copy(
+        version = manifest.version + 1,
+        input_snapshot = inputSnapshot,
+        // the schema AS STORED, derived from the plan: a parquet read-back
+        // would cost a directory listing and a footer job per batch
+        schema_ddl = SnapshotStore.asStored(withBucket.schema).toDDL,
+        completed = (manifest.completed ++ batch).sorted,
+        batches = (manifest.batches :+ batch.min).sorted)
+      writeManifest(manifest)
       batches += 1
     }
     batches
@@ -226,19 +188,12 @@ final class SnapshotStore(root: String, nBuckets: Int) {
   /** The batch's lineage rows, already on the driver, as one JSON-lines
     * file `batch_id=<id>/part-00000.json`, written without a Spark job. A
     * crash between this write and the manifest update re-runs the batch,
-    * which REPLACES the file instead of appending a duplicate. The temp
-    * name starts with `.`, so Spark's file listing never reads a temp
-    * file a crash left behind.
+    * which REPLACES the file instead of appending a duplicate.
     */
   private def writeLineage(batchId: Int, rows: Seq[LineageRow]): Unit = {
-    import SnapshotStore.jsonString
     val dir = Files.createDirectories(Paths.get(s"$lineageDir/batch_id=$batchId"))
-    val lines = rows.map(r =>
-      s"""{"partition_id":${r.partition_id},"input_snapshot":${jsonString(r.input_snapshot)},"turn_count":${r.turn_count},"failure_count":${r.failure_count},"bytes_processed":${r.bytes_processed}}""")
-    val tmp = dir.resolve(".part-00000.json.tmp")
-    Files.write(tmp, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve("part-00000.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    atomicWrite(dir.resolve("part-00000.json"),
+      rows.map(r => Json.writeValueAsString(r) + "\n").mkString.getBytes(StandardCharsets.UTF_8))
   }
 
   def readExtracted(spark: SparkSession): DataFrame = spark.read.parquet(dataDir)
@@ -265,21 +220,26 @@ object SnapshotStore {
   private val LineageSchema: StructType =
     asStored(Encoders.product[LineageRow].schema.add("batch_id", IntegerType))
 
-  /** `s` as a quoted JSON string: `"`, `\` and control characters escaped. */
-  private def jsonString(s: String): String = {
-    val b = new StringBuilder("\"")
-    s.foreach {
-      case '"'          => b ++= "\\\""
-      case '\\'         => b ++= "\\\\"
-      case c if c < ' ' => b ++= "\\u%04x".format(c.toInt)
-      case c            => b += c
-    }
-    (b += '"').toString
-  }
+  /** The manifest record; `_manifest.json` and every `_manifest.v<N>.json`
+    * hold one as a JSON object. */
+  private final case class Manifest(
+      version: Int,
+      input_snapshot: String,
+      n_buckets: Int,
+      schema_ddl: String,
+      completed: Seq[Int],
+      batches: Seq[Int])
 
-  /** Inverse of [[jsonString]] on the text between the quotes. */
-  private def jsonUnescape(s: String): String =
-    """\\(?:u([0-9a-fA-F]{4})|(.))""".r.replaceAllIn(s, m =>
-      scala.util.matching.Regex.quoteReplacement(
-        Option(m.group(1)).fold(m.group(2))(h => Integer.parseInt(h, 16).toChar.toString)))
+  /** The one JSON reader and writer for manifests and lineage lines. */
+  private val Json = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** Write `bytes` to `target` via a temp file renamed atomically over
+    * it. The temp name starts with `.`, so Spark's file listing never
+    * reads a temp file a crash left behind.
+    */
+  private def atomicWrite(target: Path, bytes: Array[Byte]): Unit = {
+    val tmp = target.resolveSibling(s".${target.getFileName}.tmp")
+    Files.write(tmp, bytes)
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
 }

@@ -93,23 +93,22 @@ object StreamingExtract {
     val timeoutConf =
       if (idleTimeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
       else GroupStateTimeout.NoTimeout()
-    turns
+    extractStream(turns)
       .groupByKey(_.conv_id)
       .flatMapGroupsWithState[ConvState, ConvStatus](
         OutputMode.Append(), timeoutConf) {
-        (convId: String, incoming: Iterator[Turn], state: GroupState[ConvState]) =>
+        (convId: String, incoming: Iterator[ExtractedTurn], state: GroupState[ConvState]) =>
           if (state.hasTimedOut) {
             val s = state.getOption.getOrElse(ConvState(0, 0, -1))
             state.remove()
             Iterator.single(ConvStatus(convId, s.nTurns, s.nFailures, s.maxTurnIdx, complete = true))
           } else {
             var s = state.getOption.getOrElse(ConvState(0, 0, -1))
-            incoming.foreach { t =>
-              val e = Extract.turn(t)
+            incoming.foreach { e =>
               s = ConvState(
                 s.nTurns + 1,
                 s.nFailures + (if (e.failure.isDefined) 1 else 0),
-                math.max(s.maxTurnIdx, t.turn_idx))
+                math.max(s.maxTurnIdx, e.turn_idx))
             }
             state.update(s)
             if (idleTimeoutMs > 0) state.setTimeoutDuration(idleTimeoutMs)

@@ -121,6 +121,21 @@ class PdfContainerSpec extends AnyFunSuite {
     assert(PdfContainerExtractor.extract(dangling).failure.contains("pdf_stream"))
   }
 
+  test("stream-less objects scan in linear time: 80k of them before the first stream") {
+    // each stream-less object used to search the rest of the file for
+    // "stream": quadratic in the object count
+    val doc = PdfDocs.pdf(0L)
+    val headerEnd = doc.indexOf('\n') + 1
+    val filler = (0 until 80000).map(i => s"${1000000 + i} 0 obj\n<< /Filler $i >>\nendobj\n").mkString
+    val padded = doc.substring(0, headerEnd) + filler + doc.substring(headerEnd)
+    PdfContainerExtractor.extract(doc) // warm-up
+    val t0 = System.nanoTime()
+    val got = PdfContainerExtractor.extract(padded)
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(got.failure.isEmpty && got.text == PdfDocs.goldenText(0L), "filler objects changed the output")
+    assert(secs < 2.0, f"${padded.length} bytes of stream-less objects took $secs%.2f s")
+  }
+
   test("string-literal decoder: nesting, escapes, octal, continuation") {
     def p(s: String) = PdfContentParser.parseString(s, 0)
     assert(p("abc)").contains(("abc", 4)))

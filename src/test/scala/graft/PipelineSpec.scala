@@ -307,6 +307,29 @@ class PipelineSpec extends AnyFunSuite {
     turns.unpersist()
   }
 
+  test("process refuses a store written under another bucket count, before any write") {
+    val turns = SynthDataset.turns(spark, 20L).cache()
+    val root = Files.createTempDirectory("graft-nbuckets").toString
+    val store = new SnapshotStore(root, nBuckets = 8)
+    intercept[RuntimeException] {
+      store.process(spark, turns, "snap-1", bucketsPerBatch = 4, failAfterBatches = Some(1))
+    }
+    def files() = scala.util.Using.resource(Files.walk(Paths.get(root))) { st =>
+      import scala.jdk.CollectionConverters._
+      st.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => p.toString -> Files.readAllBytes(p).toSeq).toMap
+    }
+    val before = files()
+    // under modulus 16, buckets 0-3 would hold other convs than under 8
+    val e = intercept[IllegalArgumentException] {
+      new SnapshotStore(root, nBuckets = 16).process(spark, turns, "snap-1", bucketsPerBatch = 4)
+    }
+    assert(e.getMessage.contains("8 buckets"), e.getMessage)
+    assert(files() == before, "a refused process must leave the store untouched")
+    assert(store.completedBuckets() == Set(0, 1, 2, 3))
+    turns.unpersist()
+  }
+
   test("resume drops stale lineage partitions left by a crash before the manifest update") {
     import spark.implicits._
     val turns = SynthDataset.turns(spark, 40L).cache()

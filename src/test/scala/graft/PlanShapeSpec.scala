@@ -220,6 +220,16 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"), s"long-conv join should broadcast:\n$p")
   }
 
+  test("the lineage tap adds no exchange and no encoder round trip to run") {
+    val turns = graft.synth.SynthDataset.turns(spark, 20L)
+    val base = plan(Pipeline.run(spark, turns).toDF())
+    val tapped = plan(Pipeline.runWithLineage(spark, turns, "plan")._1.toDF())
+    for (op <- Seq("Exchange", "SerializeFromObject", "DeserializeToObject")) {
+      val (b, t) = (op.r.findAllIn(base).size, op.r.findAllIn(tapped).size)
+      assert(b > 0 && t == b, s"$op: run has $b, runWithLineage $t:\n$tapped")
+    }
+  }
+
   test("repetition stats and PII redaction are scan->project: zero shuffles") {
     // per-doc metrics must never shuffle — the explode+groupBy alternative
     // would move ~n_words rows per doc for a per-row statistic

@@ -66,5 +66,8 @@ class QuerySpecSpec extends AnyFunSuite {
     val so = "\\((\\d+) oracle queries\\)".r.findFirstMatchIn(skill)
       .getOrElse(fail("SKILL.md: no '(<m> oracle queries)' count"))
     assert((sq.group(1).toInt, so.group(1).toInt) == ((nQueries, nOracled)), "SKILL.md counts drifted")
+    val survey = "(\\d+)/(\\d+) driver\\s+queries".r.findFirstMatchIn(read("SURVEY.md"))
+      .getOrElse(fail("SURVEY.md: no '<m>/<n> driver queries' count"))
+    assert((survey.group(2).toInt, survey.group(1).toInt) == ((nQueries, nOracled)), "SURVEY.md counts drifted")
   }
 }

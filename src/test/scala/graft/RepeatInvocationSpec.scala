@@ -33,6 +33,21 @@ class RepeatInvocationSpec extends AnyFunSuite {
     names(tmp).filter(_.startsWith("graft")) ++ names(tmp.resolve(root)).map(root + "/" + _)
   }
 
+  test("scratchDir reclaims the dirs of exited JVMs and leaves live pids' dirs alone") {
+    import java.nio.file.{Files, Paths}
+    val child = new ProcessBuilder("true").start()
+    child.waitFor()
+    val root = Paths.get(System.getProperty("java.io.tmpdir"), s"graft_scratch_${System.getProperty("user.name")}")
+    val exited = Files.createDirectories(root.resolve(s"probe_exited_000000_p${child.pid()}"))
+    Files.write(exited.resolve("state"), Array[Byte](1))
+    val live = Files.createDirectories(root.resolve(s"probe_live_000000_p${ProcessHandle.current().pid()}"))
+    val own = SparkEntry.scratchDir("probe_reclaim", "x")
+    try {
+      assert(!Files.exists(exited), s"the dir of exited pid ${child.pid()} survived")
+      assert(Files.isDirectory(live), "a live pid's dir was wiped")
+    } finally Seq(live, Paths.get(own)).foreach(Files.deleteIfExists)
+  }
+
   for (q <- Seq(
       "q47_rule_registry", "q90_stream_extract", "q106_stream_windows",
       "q180_stream_drop_audit", "q185_ivf_index_scan",
