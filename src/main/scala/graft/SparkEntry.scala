@@ -1563,18 +1563,17 @@ object SparkEntry {
     // skew report: the conversation-length histogram the salted
     // repartition acts on — top-k heavy keys with their salt fan-out
     // q104: DuckDB recomputes the conversation histogram and the same
-    // salt-cardinality decision from the golden turn table
+    // turn-index chunk count from the golden turn table
     QuerySpec("q104_skew_report", (s, _) =>
       graft.pipeline.Pipeline.skewReport(SynthDataset.turns(s, VerifyConvs)), Oracle(
       s"""WITH c AS (SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns,
                 CAST(sum(length(text)) AS BIGINT) AS n_chars,
-                CAST(count(DISTINCT turn_idx % ${pipeline.Pipeline.DefaultSaltBuckets}) AS BIGINT) AS n_salt_values
+                CAST(count(DISTINCT turn_idx // ${pipeline.Pipeline.DefaultLongConvThreshold}) AS BIGINT) AS n_salt_buckets
               FROM read_parquet('__SYNTH__/golden_turns.parquet/*.parquet')
               GROUP BY 1)
          SELECT conv_id, n_turns, n_chars,
                 CAST(n_turns >= ${pipeline.Pipeline.DefaultLongConvThreshold} AS INTEGER) AS is_long,
-                CASE WHEN n_turns >= ${pipeline.Pipeline.DefaultLongConvThreshold}
-                     THEN n_salt_values ELSE 1 END AS n_salt_buckets
+                n_salt_buckets
          FROM c ORDER BY n_turns DESC, conv_id ASC LIMIT 50""")),
     // collocation mining: adjacent-bigram lift in exact DECIMAL(38,0)
     // integers (PMI without the log), vocab-bounded broadcast joins

@@ -13,15 +13,17 @@ import org.apache.spark.util.CollectionAccumulator
   * (conv_id, turn_idx) → ONE fused `mapPartitions(Extract.turn)` stage →
   * Dataset[ExtractedTurn].
   *
-  * Salting: long conversations (the Zipf tail) are split across partitions
-  * with `salt = pmod(turn_idx, S)`; short conversations keep salt 0 so they
-  * stay co-located. Extraction is per-turn pure, so splitting a
-  * conversation across a salt boundary is safe; all *ordering-sensitive*
-  * derivation happens inside a single turn (SURVEY.md §7.5 risk 3). AQE
-  * skew handling covers joins but NOT mapPartitions skew — hence manual
-  * salting (SURVEY.md §4.2). The per-conv count pre-aggregation only reads
-  * the `conv_id` column (column pruning keeps the extra scan cheap at
-  * scale).
+  * Salting: every conversation is cut into chunks of T consecutive turn
+  * indices, `salt = turn_idx div T`, and the repartition keys on
+  * (conv_id, salt). A conversation of fewer than T turns (numbered from 0)
+  * is one key and stays co-located; a long one (the Zipf tail) spreads
+  * over ceil(n/T) keys of at most T turns each, so no hot key grows with
+  * the conversation. The salt reads only the row itself: no count, no
+  * broadcast, no join, one shuffle. Extraction is per-turn pure, so
+  * splitting a conversation across a salt boundary is safe; all
+  * *ordering-sensitive* derivation happens inside a single turn
+  * (SURVEY.md §7.5 risk 3). AQE skew handling covers joins but NOT
+  * mapPartitions skew — hence manual salting (SURVEY.md §4.2).
   *
   * Per-partition lineage (north rule): one LineageRow per input partition
   * (partition id, input snapshot, turn count, extraction-failure count,
@@ -32,50 +34,42 @@ object Pipeline {
   val DefaultSaltBuckets = 16
   val DefaultLongConvThreshold = 256L
 
-  /** Salt + repartition + stable in-partition order. */
+  /** The salt [[salted]] keys on and [[skewReport]] counts: the index of
+    * a turn's T-turn chunk within its conversation. */
+  private def chunkSalt(longConvThreshold: Long) = expr(s"turn_idx div $longConvThreshold")
+
+  /** Chunk salt + repartition + stable in-partition order. */
   def salted(
       spark: SparkSession,
       turns: Dataset[Turn],
-      saltBuckets: Int = DefaultSaltBuckets,
       longConvThreshold: Long = DefaultLongConvThreshold,
       numPartitions: Option[Int] = None
   ): Dataset[Turn] = {
     import spark.implicits._
-    val longConvs = turns
-      .groupBy($"conv_id").count()
-      .filter($"count" >= longConvThreshold)
-      .select($"conv_id".as("lc_conv_id"))
-    val salted = turns
-      .join(broadcast(longConvs), $"conv_id" === $"lc_conv_id", "left")
-      .withColumn(
-        "salt",
-        when($"lc_conv_id".isNotNull, pmod($"turn_idx", lit(saltBuckets))).otherwise(lit(0)))
+    val chunked = turns.withColumn("salt", chunkSalt(longConvThreshold))
     val repart = numPartitions match {
-      case Some(n) => salted.repartition(n, $"conv_id", $"salt")
-      case None    => salted.repartition($"conv_id", $"salt")
+      case Some(n) => chunked.repartition(n, $"conv_id", $"salt")
+      case None    => chunked.repartition($"conv_id", $"salt")
     }
-    repart
-      .sortWithinPartitions($"conv_id", $"turn_idx")
-      .drop("lc_conv_id", "salt")
-      .as[Turn]
+    repart.sortWithinPartitions($"conv_id", $"turn_idx").drop("salt").as[Turn]
   }
 
   /** Skew report: the conversation-length histogram [[salted]] acts on,
     * as a driver query — per conversation its turn count, byte weight,
     * whether it crosses the long-conversation threshold, and the number
-    * of salt buckets the salted repartition will actually spread it over
-    * (`|{turn_idx mod S}|`, 1 for short conversations). The top-k by turn
-    * count IS the skew: on a Zipf-shaped corpus these are the keys that
-    * would pin single tasks without salting.
+    * of salt keys the salted repartition actually spreads it over
+    * (`|{turn_idx div T}|`, 1 for a conversation of fewer than T turns
+    * numbered from 0). The top-k by turn count IS the skew: on a
+    * Zipf-shaped corpus these are the keys that would pin single tasks
+    * without salting.
     *
     * Scale shape: one map-side-combining agg on conv_id (count/sum plus a
-    * partial-distinct for the salt cardinality — never wider than S values
-    * per key); the top-k compiles to a TakeOrderedAndProject
+    * partial-distinct for the salt cardinality — ceil(n/T) values per
+    * key); the top-k compiles to a TakeOrderedAndProject
     * (plan-asserted), so no global sort materializes.
     */
   def skewReport(
       turns: Dataset[Turn],
-      saltBuckets: Int = DefaultSaltBuckets,
       longConvThreshold: Long = DefaultLongConvThreshold,
       topK: Int = 50): org.apache.spark.sql.DataFrame =
     turns.toDF()
@@ -83,11 +77,8 @@ object Pipeline {
       .agg(
         count(lit(1)).as("n_turns"),
         sum(length(col("text")).cast("long")).as("n_chars"),
-        countDistinct(pmod(col("turn_idx"), lit(saltBuckets))).as("n_salt_values"))
+        countDistinct(chunkSalt(longConvThreshold)).as("n_salt_buckets"))
       .withColumn("is_long", (col("n_turns") >= longConvThreshold).cast("int"))
-      .withColumn(
-        "n_salt_buckets",
-        when(col("is_long") === 1, col("n_salt_values")).otherwise(lit(1L)))
       .orderBy(col("n_turns").desc, col("conv_id").asc)
       .limit(topK)
       .select(col("conv_id"), col("n_turns"), col("n_chars"),
@@ -235,10 +226,9 @@ object Pipeline {
   def run(
       spark: SparkSession,
       turns: Dataset[Turn],
-      saltBuckets: Int = DefaultSaltBuckets,
       longConvThreshold: Long = DefaultLongConvThreshold
   ): Dataset[ExtractedTurn] =
-    extractStage(spark, salted(spark, turns, saltBuckets, longConvThreshold))
+    extractStage(spark, salted(spark, turns, longConvThreshold))
 
   /** Pipeline with lineage side-output: [[run]] plus a per-partition tap
     * over its output. The returned thunk yields the LineageRows observed
@@ -253,7 +243,6 @@ object Pipeline {
       spark: SparkSession,
       turns: Dataset[Turn],
       inputSnapshot: String,
-      saltBuckets: Int = DefaultSaltBuckets,
       longConvThreshold: Long = DefaultLongConvThreshold
   ): (Dataset[ExtractedTurn], () => Seq[LineageRow]) = {
     import spark.implicits._
@@ -261,7 +250,7 @@ object Pipeline {
       spark.sparkContext.collectionAccumulator[LineageRow](s"lineage-$inputSnapshot")
     // the tap's MapPartitions sits directly on the extraction's, so
     // EliminateSerialization leaves no encoder round trip between them
-    val out = run(spark, turns, saltBuckets, longConvThreshold).mapPartitions { it =>
+    val out = run(spark, turns, longConvThreshold).mapPartitions { it =>
       var turnCount = 0L
       var failureCount = 0L
       var bytes = 0L

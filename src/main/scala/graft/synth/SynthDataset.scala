@@ -7,7 +7,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * per conversation, flat-mapped to its turns. Generation is a pure
   * function of the conv index (Synth), so the corpus is identical at any
   * parallelism — the long-conversation skew lands in single input tasks by
-  * construction, which is exactly what `Pipeline.salted` then fixes.
+  * construction, which `Pipeline.salted` then spreads by cutting each
+  * conversation into chunks of T consecutive turns.
   */
 object SynthDataset {
 

@@ -1307,9 +1307,7 @@ class OpsSpec extends AnyFunSuite {
         val nTurns = ts.size.toLong
         val nChars = ts.map(_.text.length.toLong).sum
         val isLong = if (nTurns >= graft.pipeline.Pipeline.DefaultLongConvThreshold) 1 else 0
-        val nSalts =
-          if (isLong == 1) ts.map(_.turn_idx % graft.pipeline.Pipeline.DefaultSaltBuckets).distinct.size.toLong
-          else 1L
+        val nSalts = ts.map(_.turn_idx / graft.pipeline.Pipeline.DefaultLongConvThreshold).distinct.size.toLong
         (cid, nTurns, nChars, isLong, nSalts)
       }.toSeq.sortBy(r => (-r._2, r._1)).take(50)
     val got = graft.pipeline.Pipeline.skewReport(graft.synth.SynthDataset.turns(spark, nConvs.toLong))
@@ -1318,6 +1316,7 @@ class OpsSpec extends AnyFunSuite {
     // the corpus must genuinely contain both long (salted) and short convs
     assert(got.count(_._4 == 1) >= 1 && got.count(_._4 == 0) >= 1)
     assert(got.filter(_._4 == 1).forall(_._5 > 1), "long convs must fan out over >1 salt")
+    assert(got.filter(_._4 == 0).forall(_._5 == 1), "short convs must stay one salt key")
   }
 
   test("collocations: exact-integer lift equals a brute-force local recompute") {

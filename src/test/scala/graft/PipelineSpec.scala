@@ -16,7 +16,7 @@ class PipelineSpec extends AnyFunSuite {
   test("distributed extraction matches local golden corpus exactly") {
     import spark.implicits._
     val turns = SynthDataset.turns(spark, NConvs)
-    val extracted = Pipeline.run(spark, turns, saltBuckets = 4, longConvThreshold = 64)
+    val extracted = Pipeline.run(spark, turns, longConvThreshold = 64)
       .select($"conv_id", $"turn_idx", $"extracted_text", $"failure")
       .as[(String, Int, String, Option[String])]
       .collect()
@@ -34,8 +34,9 @@ class PipelineSpec extends AnyFunSuite {
 
   test("salting splits long conversations without loss or duplication") {
     import spark.implicits._
+    val T = 64
     val turns = SynthDataset.turns(spark, NConvs)
-    val salted = Pipeline.salted(spark, turns, saltBuckets = 4, longConvThreshold = 64, numPartitions = Some(8))
+    val salted = Pipeline.salted(spark, turns, longConvThreshold = T, numPartitions = Some(8))
     // partition of the data: same multiset of (conv_id, turn_idx)
     val before = turns.select($"conv_id", $"turn_idx").as[(String, Int)].collect().sorted.toSeq
     val after = salted.select($"conv_id", $"turn_idx").as[(String, Int)].collect().sorted.toSeq
@@ -46,6 +47,35 @@ class PipelineSpec extends AnyFunSuite {
       .mapPartitions(it => Iterator.single(it.count(_.conv_id == longConv)))
       .collect().count(_ > 0)
     assert(partsOfLong > 1, s"long conv not split: present in $partsOfLong partitions")
+
+    // chunk salting, checked on where each turn landed
+    val placed = salted
+      .mapPartitions { it =>
+        val pid = org.apache.spark.TaskContext.getPartitionId()
+        it.map(t => (pid, t.conv_id, t.turn_idx))
+      }
+      .collect().toSeq
+    val byConv = placed.groupBy(_._2)
+    // every conversation shorter than T sits in exactly one partition
+    val short = byConv.filter(_._2.size < T)
+    assert(short.nonEmpty)
+    short.foreach { case (c, ts) =>
+      assert(ts.map(_._1).distinct.size == 1, s"short conv $c split over partitions")
+    }
+    // a salt key (conv_id, turn_idx div T) sits in one partition and holds at most T turns
+    placed.groupBy(p => (p._2, p._3 / T)).foreach { case (k, ts) =>
+      assert(ts.size <= T, s"key $k holds ${ts.size} turns")
+      assert(ts.map(_._1).distinct.size == 1, s"key $k split over partitions")
+    }
+    // a contiguous n-turn conversation spans ceil(n/T) salts, so at most
+    // that many partitions
+    byConv.foreach { case (c, ts) =>
+      val n = ts.size
+      assert(ts.map(_._3).sorted == (0 until n), s"conv $c is not contiguous")
+      val chunks = (n + T - 1) / T
+      assert(ts.map(_._3 / T).distinct.size == chunks)
+      assert(ts.map(_._1).distinct.size <= chunks, s"conv $c spans more partitions than salts")
+    }
   }
 
   test("lineage rows cover all turns and count failures correctly") {

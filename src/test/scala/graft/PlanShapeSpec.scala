@@ -1,10 +1,8 @@
 package graft
 
-import graft.model.Turn
 import graft.ops.{RelationalOps, WebOps}
 import graft.pipeline.Pipeline
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Physical-plan regressions: the properties that matter at 100 TB must
   * be visible in the plan, not assumed — broadcast for dimension joins,
@@ -203,21 +201,16 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("gram"), s"gram key missing from the join:\n$p")
   }
 
-  test("extraction pipeline: one data shuffle; pre-agg scan prunes to conv_id") {
-    import spark.implicits._
-    // parquet-backed input so scan pruning is observable
-    val tmp = Files.createTempDirectory("graft-plan").toString + "/turns"
-    graft.synth.SynthDataset.turns(spark, 20L).write.parquet(tmp)
-    val turns = spark.read.parquet(tmp).as[Turn]
-    val p = plan(Pipeline.run(spark, turns).toDF())
-    // the long-conv pre-aggregation must scan only conv_id
-    assert(p.contains("ReadSchema: struct<conv_id:string>"),
-      s"pre-agg scan reads more than conv_id:\n$p")
-    // exactly one full-data exchange: the salted repartition. (The tiny
-    // pre-agg side has its own partial/final agg exchange + broadcast.)
-    val exchanges = "(?<!Broadcast)Exchange hashpartitioning".r.findAllIn(p).size
-    assert(exchanges <= 2, s"unexpected extra shuffles ($exchanges):\n$p")
-    assert(p.contains("BroadcastHashJoin"), s"long-conv join should broadcast:\n$p")
+  test("extraction pipeline: one (conv_id, salt) shuffle; no join, broadcast or agg") {
+    val p = plan(Pipeline.run(spark, graft.synth.SynthDataset.turns(spark, 20L)).toDF())
+    // the chunk salt reads only the row: the salted repartition is the
+    // plan's one exchange, with no count pre-aggregation to join back
+    val exchanges = "Exchange".r.findAllIn(p).size
+    assert(exchanges == 1, s"expected exactly the salted repartition ($exchanges):\n$p")
+    assert("Exchange hashpartitioning\\(conv_id#\\d+, salt#\\d+L?,".r.findFirstIn(p).isDefined,
+      s"the exchange must key on (conv_id, salt):\n$p")
+    for (op <- Seq("Join", "BroadcastExchange", "Aggregate"))
+      assert(!p.contains(op), s"unexpected $op in the pipeline plan:\n$p")
   }
 
   test("the lineage tap adds no exchange and no encoder round trip to run") {
@@ -868,11 +861,11 @@ class PlanShapeSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.posexplode(
           org.apache.spark.sql.functions.col("spans"))))
     assert(p.contains("Generate"), s"span explode must compile to Generate:\n$p")
-    // the pipeline itself costs 2 (salted repartition + tiny long-conv
-    // pre-agg, same budget as the baseline pipeline assert); posexplode
-    // must ride above them without adding a third
-    val exchanges = "(?<!Broadcast)Exchange hashpartitioning".r.findAllIn(p).size
-    assert(exchanges <= 2, s"posexplode must not add a shuffle ($exchanges):\n$p")
+    // the pipeline itself costs 1 (the salted repartition, as the
+    // pipeline plan assert pins); posexplode must ride above it without
+    // adding a second
+    val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
+    assert(exchanges == 1, s"posexplode must not add a shuffle ($exchanges):\n$p")
   }
 
   test("conv fingerprint dups: two sha-only exchanges, map-side partials, no join") {
@@ -993,10 +986,9 @@ class PlanShapeSpec extends AnyFunSuite {
   test("extract coverage: the kind rollup adds ONE partial-agg exchange over the pipeline") {
     val p = plan(graft.SparkEntry.queries("q162_extract_coverage")(spark, "/unused"))
     assert(p.contains("partial_count"), s"missing map-side partials:\n$p")
-    // the pipeline's salt stage carries its own broadcast join; the
-    // ROLLUP itself must add none of the expensive kinds
-    assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
-      s"coverage rollup must not add a heavy join:\n$p")
+    // the pipeline's chunk salt joins nothing; the ROLLUP must add no join
+    assert(!p.contains("Join") && !p.contains("CartesianProduct"),
+      s"coverage rollup must not add a join:\n$p")
   }
 
   test("section chunks: in-row windows + Generate — zero exchanges, zero joins") {

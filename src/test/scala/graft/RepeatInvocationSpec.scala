@@ -19,9 +19,10 @@ class RepeatInvocationSpec extends AnyFunSuite {
     SparkEntry.queries(name)(spark, dir)
       .collect().map(_.toString).toSet
 
-  /** The temp-dir entries this code can create: everything under the
-    * per-user scratch root, plus top-level `graft*` entries (the shape
-    * of a per-call temp dir). Other processes' entries are left out. */
+  /** The temp-dir entries this code can create: the dirs under the
+    * per-user scratch root keyed by this JVM's pid (`*_p<pid>`), plus
+    * top-level `graft*` entries (the shape of a per-call temp dir).
+    * Other live JVMs' scratch dirs under the shared root are left out. */
   private def tmpEntries(): Set[String] = {
     import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._
@@ -30,7 +31,9 @@ class RepeatInvocationSpec extends AnyFunSuite {
       else scala.util.Using.resource(Files.list(d))(_.iterator().asScala.map(_.getFileName.toString).toSet)
     val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
     val root = s"graft_scratch_${System.getProperty("user.name")}"
-    names(tmp).filter(_.startsWith("graft")) ++ names(tmp.resolve(root)).map(root + "/" + _)
+    val own = s"_p${ProcessHandle.current().pid()}"
+    names(tmp).filter(_.startsWith("graft")) ++
+      names(tmp.resolve(root)).filter(_.endsWith(own)).map(root + "/" + _)
   }
 
   test("scratchDir reclaims the dirs of exited JVMs and leaves live pids' dirs alone") {
