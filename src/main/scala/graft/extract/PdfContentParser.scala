@@ -89,10 +89,14 @@ object PdfContentParser {
     val catalog = objs.get(rootNum).map(_._1).getOrElse(return Left("pdf_trailer"))
     val pagesNum = ref(catalog, "/Pages").getOrElse(return Left("pdf_pages"))
 
-    // /Kids in order, recursing through intermediate /Pages nodes
+    // /Kids in preorder through intermediate /Pages nodes — an explicit
+    // stack, so a deep page tree never depends on the thread's stack size
     val pageNums = mutable.ArrayBuffer.empty[Int]
     val visited = mutable.Set.empty[Int]
-    def walk(num: Int): Either[String, Unit] = {
+    val kidRe = java.util.regex.Pattern.compile("(\\d+)\\s+\\d+\\s+R")
+    val pending = mutable.Stack(pagesNum)
+    while (pending.nonEmpty) {
+      val num = pending.pop()
       if (!visited.add(num)) return Left("pdf_pages") // cycle guard
       val body = objs.get(num).map(_._1).getOrElse(return Left("pdf_pages"))
       if (body.contains("/Type /Pages") || body.contains("/Type/Pages")) {
@@ -100,17 +104,13 @@ object PdfContentParser {
         if (kidsAt < 0) return Left("pdf_pages")
         val open = body.indexOf('[', kidsAt); val close = body.indexOf(']', kidsAt)
         if (open < 0 || close < 0 || close < open) return Left("pdf_pages")
-        val kidRe = java.util.regex.Pattern.compile("(\\d+)\\s+\\d+\\s+R")
         val km = kidRe.matcher(body.substring(open + 1, close))
-        var any = false
-        while (km.find()) {
-          any = true
-          walk(km.group(1).toInt) match { case l @ Left(_) => return l; case _ => }
-        }
-        if (!any) Left("pdf_pages") else Right(())
-      } else { pageNums += num; Right(()) }
+        val kids = mutable.ArrayBuffer.empty[Int]
+        while (km.find()) kids += km.group(1).toInt
+        if (kids.isEmpty) return Left("pdf_pages")
+        kids.reverseIterator.foreach(pending.push) // first kid pops first
+      } else pageNums += num
     }
-    walk(pagesNum) match { case Left(e) => return Left(e); case _ => }
     if (pageNums.isEmpty) return Left("pdf_pages")
 
     // --- per page: MediaBox height + content streams -> runs ---
@@ -164,9 +164,6 @@ object PdfContentParser {
   private final case class TNum(v: Double) extends Tok
   private final case class TStr(v: String) extends Tok
   private final case class TName(v: String) extends Tok
-  private final case class TOp(v: String) extends Tok
-  private case object TArrOpen extends Tok
-  private case object TArrClose extends Tok
   private final case class TArr(items: Seq[Tok]) extends Tok
 
   /** PDF string literal body starting after '(' — returns (text, index

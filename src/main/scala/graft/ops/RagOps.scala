@@ -33,9 +33,6 @@ object RagOps {
   /** ref: agents/rag/rag_config.yaml:5 */
   val ChunkOverlap = 16
 
-  /** cos² x10000 equivalent of the reference's 0.95 cosine threshold. */
-  val SimilarityThresholdX10000 = 9025L
-
   /** Feature-hash dimensionality of the deterministic chunk vectors. */
   val RagDims = 64
 

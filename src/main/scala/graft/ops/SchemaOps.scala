@@ -7,13 +7,11 @@ import org.apache.spark.sql.types._
 /** Schema evolution across drifted ingest batches — the engine-side
   * analogue of the reference's runtime schema maintenance: per-document
   * column-set union (ref: agents/sql_agent/json_to_db.py:49-68
-  * gather_schema over every document) and ALTER TABLE ADD COLUMN for
-  * late-arriving fields (ref: agents/sql_agent/utils.py:52-71
-  * ensure_column_exists).
+  * gather_schema over every document), where a batch's missing columns
+  * are null-filled by name.
   *
   * All operations are plan-time only (projections + unionByName) — no
-  * shuffle, no data rewrite; at 100 TB "adding a column" stays a
-  * metadata operation exactly as it should.
+  * shuffle, no data rewrite.
   */
 object SchemaOps {
 
@@ -152,37 +150,5 @@ object SchemaOps {
       when(p.getField(req).isNotNull, p.getField(key).cast("string")).otherwise(acc)
     }
     df.withColumn("schema_name", name).withColumn("key_field", keyField)
-  }
-
-  /** Route records to their per-type shred: one typed frame per
-    * candidate, carrying every non-payload column plus the parsed fields
-    * (the reference inserts each classified JSON into that schema's
-    * table family). Unmatched records are the residue under
-    * `schema_name = 'unknown'` in [[classifyJson]]'s output.
-    */
-  def routeBySchema(
-      df: DataFrame, jsonCol: String,
-      candidates: Seq[DispatchCandidate] = DispatchCandidates): Seq[(String, DataFrame)] = {
-    val classified = classifyJson(df, jsonCol, candidates)
-    val carry = df.columns.filterNot(_ == jsonCol).map(col).toSeq
-    candidates.map { case (n, sc, _, _) =>
-      (n, classified.filter(col("schema_name") === n)
-        .withColumn("__parsed", from_json(col(jsonCol), sc))
-        .select(carry ++ sc.fieldNames.map(f => col(s"__parsed.$f")): _*))
-    }
-  }
-
-  /** ALTER TABLE ADD COLUMN analogue (ref: utils.py:52-71): add every
-    * `target` column the frame lacks as a typed null, preserving target
-    * column order for the existing+added set.
-    */
-  def ensureColumns(df: DataFrame, target: StructType): DataFrame = {
-    val have = df.columns.toSet
-    val withAll = target.fields.foldLeft(df) { (acc, f) =>
-      if (have.contains(f.name)) acc
-      else acc.withColumn(f.name, lit(null).cast(f.dataType))
-    }
-    val ordered = target.fieldNames ++ df.columns.filterNot(target.fieldNames.contains)
-    withAll.select(ordered.map(col).toSeq: _*)
   }
 }

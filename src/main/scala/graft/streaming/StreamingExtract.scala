@@ -1,10 +1,9 @@
 package graft.streaming
 
-import graft.extract.Extract
 import graft.model.{ExtractedTurn, Turn}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 /** Structured Streaming facade over the extraction pipeline.
   *
@@ -38,102 +37,6 @@ object StreamingExtract {
     */
   def extractStream(turns: Dataset[Turn]): Dataset[ExtractedTurn] =
     graft.pipeline.Pipeline.extractStage(turns.sparkSession, turns)
-
-  /** Per-turn outcome carrying event time — `ExtractedTurn` deliberately
-    * has no `ts`, so windowed aggregation maps to this instead. */
-  final case class TurnOutcome(
-      conv_id: String, role: String, ts: java.sql.Timestamp, failed: Boolean)
-
-  /** Windowed failure-rate aggregation with a watermark: event-time
-    * tumbling windows over `ts`, counting turns and extraction failures
-    * per (window, role). Late turns beyond the watermark are dropped —
-    * the streaming analogue of the reference's late page re-ingest
-    * (app.py:98-109: pages processed later re-enqueue as a new task).
-    */
-  def failureWindows(
-      turns: Dataset[Turn],
-      watermark: String = "10 minutes",
-      windowLen: String = "5 minutes"): DataFrame = {
-    import turns.sparkSession.implicits._
-    turns
-      .map(t => TurnOutcome(t.conv_id, t.role, t.ts, Extract.turn(t).failure.isDefined))
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen), col("role"))
-      .agg(
-        count(lit(1)).as("n_turns"),
-        sum(when(col("failed"), 1L).otherwise(0L)).as("n_failures"))
-  }
-
-  /** Running per-conversation state (turn count, failure count, last turn
-    * index) maintained with `flatMapGroupsWithState` — the stateful
-    * analogue of the reference's per-document task status record
-    * (PENDING/SUCCESS/FAILURE, app.py:172-186). Emits one updated status
-    * row per conversation per micro-batch.
-    *
-    * State bounding: with a CONTINUOUS trigger, pass a positive
-    * `idleTimeoutMs` — ProcessingTimeTimeout then evicts conversations
-    * idle past it (bounded state). The default is 0 (NoTimeout) because
-    * pending processing-time timeouts are incompatible with this
-    * module's `Trigger.AvailableNow` drain (the drain loop never
-    * terminates while timeouts are pending); under AvailableNow the
-    * state lives only for the bounded drain, so eviction is not needed.
-    */
-  final case class ConvState(nTurns: Long, nFailures: Long, maxTurnIdx: Int)
-  final case class ConvStatus(
-      conv_id: String,
-      n_turns: Long,
-      n_failures: Long,
-      max_turn_idx: Int,
-      complete: Boolean)
-
-  def conversationStatus(
-      turns: Dataset[Turn],
-      idleTimeoutMs: Long = 0L): Dataset[ConvStatus] = {
-    import turns.sparkSession.implicits._
-    val timeoutConf =
-      if (idleTimeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    extractStream(turns)
-      .groupByKey(_.conv_id)
-      .flatMapGroupsWithState[ConvState, ConvStatus](
-        OutputMode.Append(), timeoutConf) {
-        (convId: String, incoming: Iterator[ExtractedTurn], state: GroupState[ConvState]) =>
-          if (state.hasTimedOut) {
-            val s = state.getOption.getOrElse(ConvState(0, 0, -1))
-            state.remove()
-            Iterator.single(ConvStatus(convId, s.nTurns, s.nFailures, s.maxTurnIdx, complete = true))
-          } else {
-            var s = state.getOption.getOrElse(ConvState(0, 0, -1))
-            incoming.foreach { e =>
-              s = ConvState(
-                s.nTurns + 1,
-                s.nFailures + (if (e.failure.isDefined) 1 else 0),
-                math.max(s.maxTurnIdx, e.turn_idx))
-            }
-            state.update(s)
-            if (idleTimeoutMs > 0) state.setTimeoutDuration(idleTimeoutMs)
-            Iterator.single(ConvStatus(convId, s.nTurns, s.nFailures, s.maxTurnIdx, complete = false))
-          }
-      }
-  }
-
-  /** Streaming exact dedup: drop turns whose (conv_id, turn_idx) was
-    * already seen within the watermark window — the streaming counterpart
-    * of the reference's `INSERT OR IGNORE` idempotent re-ingest
-    * (ref: agents/sql_agent/json_to_db.py:38). State is bounded by the
-    * watermark: a key older than `watermark` is evicted, so re-delivery
-    * beyond that horizon must be handled by the idempotent sink (same
-    * trade the reference makes with at-least-once Celery redelivery).
-    */
-  def dedupedTurnStream(
-      turns: Dataset[Turn],
-      watermark: String = "10 minutes"): Dataset[Turn] = {
-    import turns.sparkSession.implicits._
-    turns
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("conv_id", "turn_idx")
-      .as[Turn]
-  }
 
   /** Run the extraction stream to a parquet sink with checkpointing,
     * draining all available input then stopping (Trigger.AvailableNow).

@@ -21,8 +21,4 @@ object SynthDataset {
     import spark.implicits._
     spark.range(nConvs).flatMap(c => Synth.convTurns(c))
   }
-
-  /** Total turn count for a conv range (driver-side, cheap). */
-  def totalTurns(nConvs: Long): Long =
-    (0L until nConvs).map(Synth.convLen(_).toLong).sum
 }

@@ -11,7 +11,7 @@ import graft.ops.BpeOps
   * same-symbol runs pin the leftmost semantics the packed representation
   * claims to preserve.
   */
-class BpeOpsSpec extends AnyFunSuite {
+class BpeOpsSpec extends AnyFunSuite with SparkSessionFixture.TempDirs {
 
   private lazy val spark = SparkSessionFixture.spark
 
@@ -133,7 +133,7 @@ class BpeOpsSpec extends AnyFunSuite {
     val (merges, mapping) = BpeOps.train(docs, 5) // default MinWordCount floor
     assert(merges == Seq((1, "q", "q", 3L)), s"floored merges: $merges")
     assert(mapping.toMap == Map("qq" -> "qq"), "mapping covers floored words only")
-    val dir = java.nio.file.Files.createTempDirectory("graft-bpe-floor").toString
+    val dir = tempDir("graft-bpe-floor").toString
     docs.write.parquet(s"$dir/documents.parquet")
     val enc = BpeOps.encode(spark, dir, 5).as[(Long, Int, Long, String)].collect()
     // qq->1 token (x3), zzzzzzzzzz->10 chars untouched, qqq->leftmost (qq, q)
@@ -162,7 +162,7 @@ class BpeOpsSpec extends AnyFunSuite {
       lang -> ((ids.size.toLong, words, bytes, toks,
         bytes * 100 / math.max(toks, 1), toks * 100 / math.max(words, 1)))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-bpe-fert").toString
+    val dir = tempDir("graft-bpe-fert").toString
     corpus.withColumn("lang",
       org.apache.spark.sql.functions.element_at(
         org.apache.spark.sql.functions.typedLit(langOf), $"doc_id"))
@@ -192,7 +192,7 @@ class BpeOpsSpec extends AnyFunSuite {
     val got = {
       // encode() reads from an sf dir; drive the same logic on the local
       // corpus by round-tripping through a temp parquet table dir
-      val dir = java.nio.file.Files.createTempDirectory("graft-bpe").toString
+      val dir = tempDir("graft-bpe").toString
       corpus.write.parquet(s"$dir/documents.parquet")
       BpeOps.encode(spark, dir, n)
         .as[(Long, Int, Long, String)].collect()
@@ -208,7 +208,7 @@ class BpeOpsSpec extends AnyFunSuite {
         counts((pair(0), pair(1))) += c
       counts.toMap
     }
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-bpe2").toString
+    val dir2 = tempDir("graft-bpe2").toString
     corpus.write.parquet(s"$dir2/documents.parquet")
     val gotPairs = BpeOps.topPairs(spark, dir2, 1000)
       .as[(String, String, Long)].collect()

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (est >= exact for EVERY term), and heavy-hitter completeness (the
   * sketch-passing set contains every exactly-heavy term).
   */
-class CountMinSpec extends AnyFunSuite {
+class CountMinSpec extends AnyFunSuite with SparkSessionFixture.TempDirs {
 
   private lazy val spark = SparkSessionFixture.spark
 
@@ -98,7 +98,7 @@ class CountMinSpec extends AnyFunSuite {
 
   test("heavy hitters: sketch-passing set contains every exactly-heavy term, counts exact") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cms").toString
+    val dir = tempDir("cms").toString
     docsDf.withColumn("lang", lit("en")).withColumn("source", lit("synth"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = CountMinSketch.heavyHitters(spark, dir)

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * over the driver's sf0.001 tables (oracle parity with DuckDB is checked
   * separately by the driver harness + tools/local_oracle_check.py).
   */
-class OpsSpec extends AnyFunSuite {
+class OpsSpec extends AnyFunSuite with SparkSessionFixture.TempDirs {
 
   private lazy val spark = SparkSessionFixture.spark
   private val dir = "/root/testdata/sf0.001"
@@ -370,7 +370,7 @@ class OpsSpec extends AnyFunSuite {
       (100L + i, jit)
     }
     val all = bases ++ dups
-    val tmp = java.nio.file.Files.createTempDirectory("graft-embdup").toString
+    val tmp = tempDir("graft-embdup").toString
     all.toDF("vec_id", "embedding").write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
 
     val threshold = 9500
@@ -400,7 +400,7 @@ class OpsSpec extends AnyFunSuite {
 
     // out-of-contract DUPLICATE vec_id rows fan out through the fetch
     // joins; the post-threshold dedup must keep the output identical
-    val tmp2 = java.nio.file.Files.createTempDirectory("graft-embdup2").toString
+    val tmp2 = tempDir("graft-embdup2").toString
     (all ++ all.take(5)).toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$tmp2/embeddings.parquet")
     val got2 = DedupOps.embeddingDupPairs(spark, tmp2, threshold, nPlanes)
@@ -706,7 +706,7 @@ class OpsSpec extends AnyFunSuite {
     assert(got == want)
     // the sf corpus' sources are near-uniform (documented in q132), so
     // the regime split is pinned on a SKEWED local corpus instead
-    val skewDir = java.nio.file.Files.createTempDirectory("graft-epoch").toString
+    val skewDir = tempDir("graft-epoch").toString
     Seq(
       (1L, "big", ("w " * 1000).trim),
       (2L, "small", ("w " * 16).trim))
@@ -752,7 +752,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("phraseQuery: repeated-token phrases count overlapping occurrences") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("phraseq").toString
+    val tmp = tempDir("phraseq").toString
     Seq((1L, "batch batch batch end", "en", "s", 4L),
         (2L, "batch end batch batch", "en", "s", 4L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -888,7 +888,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("rule registry: persists across reopen, rejects duplicates, violations match filters") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-rr").toString + "/rules.tsv"
+    val path = tempDir("graft-rr").toString + "/rules.tsv"
     val reg = new graft.pipeline.RuleRegistry(path)
     reg.register("in_range", "actual_quantity BETWEEN allowed_range_min AND allowed_range_max",
       Seq("qa@x.example", "lead@x.example"))
@@ -931,7 +931,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("exact-before-near composition: a 1000-copy exact-dup clique stays O(clique), never O(clique^2)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-clique").toString
+    val dir = tempDir("graft-clique").toString
     val base = (0 until 60).map(i => s"tok${i * 7 % 61} w$i").mkString(" ")
     val rows = (0L until 1000L).map(i => (i, "en", base)) ++ Seq(
       (1000L, "en", base + " tail alpha"),

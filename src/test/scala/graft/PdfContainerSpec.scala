@@ -121,6 +121,23 @@ class PdfContainerSpec extends AnyFunSuite {
     assert(PdfContainerExtractor.extract(dangling).failure.contains("pdf_stream"))
   }
 
+  test("a 20,000-deep chain of /Pages nodes extracts its one page, independent of stack size") {
+    // objects 2..depth+1 are /Pages nodes, each the only kid of the one
+    // before; the last one holds the page, which draws "(hello)"
+    val depth = 20000
+    val page = depth + 2
+    val sb = new StringBuilder("%PDF-1.4\n1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n")
+    for (n <- 2 to depth + 1)
+      sb ++= s"$n 0 obj << /Type /Pages /Kids [${n + 1} 0 R] /Count 1 >> endobj\n"
+    val content = "BT /F1 12 Tf 72 700 Td (hello) Tj ET"
+    sb ++= s"$page 0 obj << /Type /Page /MediaBox [0 0 612 792] /Contents ${page + 1} 0 R >> endobj\n"
+    sb ++= s"${page + 1} 0 obj << /Length ${content.length} >>\nstream\n$content\nendstream\nendobj\n"
+    sb ++= s"trailer << /Size ${page + 2} /Root 1 0 R >>\n%%EOF"
+    val got = PdfContainerExtractor.extract(sb.toString)
+    assert(got.failure.isEmpty, s"failed with ${got.failure}")
+    assert(got.text == "hello")
+  }
+
   test("stream-less objects scan in linear time: 80k of them before the first stream") {
     // each stream-less object used to search the rest of the file for
     // "stream": quadratic in the object count

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with SparkSessionFixture.TempDirs {
 
   private lazy val spark = SparkSessionFixture.spark
 
@@ -97,8 +97,8 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val turns = SynthDataset.turns(spark, 60L).cache()
 
-    val fullDir = Files.createTempDirectory("graft-full").toString
-    val resumeDir = Files.createTempDirectory("graft-resume").toString
+    val fullDir = tempDir("graft-full").toString
+    val resumeDir = tempDir("graft-resume").toString
 
     // one-shot run
     new SnapshotStore(fullDir, nBuckets = 8).process(spark, turns, "snap-1", bucketsPerBatch = 8)
@@ -290,7 +290,7 @@ class PipelineSpec extends AnyFunSuite {
   test("time travel: each frozen version re-reads its exact prefix; latest equals the full table") {
     import spark.implicits._
     val turns = SynthDataset.turns(spark, 40L).cache()
-    val root = Files.createTempDirectory("graft-tt").toString
+    val root = tempDir("graft-tt").toString
     val store = new SnapshotStore(root, nBuckets = 8)
     intercept[RuntimeException] {
       store.process(spark, turns, "snap-1", bucketsPerBatch = 3, failAfterBatches = Some(2))
@@ -321,9 +321,9 @@ class PipelineSpec extends AnyFunSuite {
   test("resume over an orphaned version file keeps versions gapless and as-of sets crash-free") {
     val turns = SynthDataset.turns(spark, 40L).cache()
     def asOf(store: SnapshotStore) = store.snapshotVersions().map(v => v -> store.completedBucketsAsOf(v))
-    val clean = new SnapshotStore(Files.createTempDirectory("graft-ver-clean").toString, nBuckets = 8)
+    val clean = new SnapshotStore(tempDir("graft-ver-clean").toString, nBuckets = 8)
     clean.process(spark, turns, "snap-1", bucketsPerBatch = 3)
-    val root = Files.createTempDirectory("graft-ver-orphan").toString
+    val root = tempDir("graft-ver-orphan").toString
     val store = new SnapshotStore(root, nBuckets = 8)
     intercept[RuntimeException] {
       store.process(spark, turns, "snap-1", bucketsPerBatch = 3, failAfterBatches = Some(2))
@@ -339,7 +339,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("process refuses a store written under another bucket count, before any write") {
     val turns = SynthDataset.turns(spark, 20L).cache()
-    val root = Files.createTempDirectory("graft-nbuckets").toString
+    val root = tempDir("graft-nbuckets").toString
     val store = new SnapshotStore(root, nBuckets = 8)
     intercept[RuntimeException] {
       store.process(spark, turns, "snap-1", bucketsPerBatch = 4, failAfterBatches = Some(1))
@@ -363,7 +363,7 @@ class PipelineSpec extends AnyFunSuite {
   test("resume drops stale lineage partitions left by a crash before the manifest update") {
     import spark.implicits._
     val turns = SynthDataset.turns(spark, 40L).cache()
-    val root = Files.createTempDirectory("graft-stale").toString
+    val root = tempDir("graft-stale").toString
     val store = new SnapshotStore(root, nBuckets = 8)
     intercept[RuntimeException] {
       store.process(spark, turns, "snap-1", bucketsPerBatch = 2, failAfterBatches = Some(2))
@@ -393,7 +393,7 @@ class PipelineSpec extends AnyFunSuite {
   test("a lineage temp file left by a crash before its rename is never read") {
     import spark.implicits._
     val turns = SynthDataset.turns(spark, 20L).cache()
-    val root = Files.createTempDirectory("graft-lineage-tmp").toString
+    val root = tempDir("graft-lineage-tmp").toString
     val store = new SnapshotStore(root, nBuckets = 8)
     store.process(spark, turns, "snap-1", bucketsPerBatch = 4)
     val registered = store.completedBatchIds().min
@@ -406,7 +406,7 @@ class PipelineSpec extends AnyFunSuite {
   test("snapshot ids with quotes, backslashes and newlines round-trip through manifest and lineage") {
     import spark.implicits._
     val turns = SynthDataset.turns(spark, 20L).cache()
-    val root = Files.createTempDirectory("graft-escape").toString
+    val root = tempDir("graft-escape").toString
     val store = new SnapshotStore(root, nBuckets = 8)
     val snapshot = "a\"b\\c\nd"
     store.process(spark, turns, snapshot, bucketsPerBatch = 4)
@@ -427,7 +427,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val key = "spark.sql.sources.partitionOverwriteMode"
     val turns = SynthDataset.turns(spark, 20L).cache()
-    val store = new SnapshotStore(Files.createTempDirectory("graft-conf").toString, nBuckets = 8)
+    val store = new SnapshotStore(tempDir("graft-conf").toString, nBuckets = 8)
     spark.conf.set(key, "static")
     try {
       store.process(spark, turns, "snap-1", bucketsPerBatch = 4)
@@ -481,16 +481,34 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val turns = SynthDataset.turns(spark, 20L).cache()
     turns.count()
-    val store = new SnapshotStore(Files.createTempDirectory("graft-jobs").toString, nBuckets = 8)
+    val store = new SnapshotStore(tempDir("graft-jobs").toString, nBuckets = 8)
     val processJobs = jobsStartedBy(store.process(spark, turns, "snap-1", bucketsPerBatch = 8))
     val writeJobs = jobsStartedBy {
       Pipeline.runWithLineage(spark, turns, "snap-1")._1
         .withColumn("bucket", pmod(xxhash64($"conv_id"), lit(8L)).cast("int"))
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").parquet(Files.createTempDirectory("graft-jobs-write").toString)
+        .partitionBy("bucket").parquet(tempDir("graft-jobs-write").toString)
     }
     assert(writeJobs > 0)
     assert(processJobs == writeJobs, s"process started $processJobs jobs, its data write alone $writeJobs")
     turns.unpersist()
+  }
+
+  test("turn table round-trips through ORC with identical extraction results") {
+    // source-format agnosticism: the pipeline is a function of Dataset[Turn],
+    // not of the storage format — ORC (columnar, non-parquet) must yield
+    // byte-identical extraction
+    import spark.implicits._
+    val base = tempDir("graft-orc").toString
+    val turns = graft.synth.SynthDataset.turns(spark, 30L)
+    turns.write.orc(s"$base/turns.orc")
+    val viaOrc = graft.pipeline.Pipeline
+      .run(spark, spark.read.orc(s"$base/turns.orc").as[graft.model.Turn])
+      .select("conv_id", "turn_idx", "extracted_text")
+      .collect().map(_.toSeq).toSet
+    val direct = graft.pipeline.Pipeline.run(spark, turns)
+      .select("conv_id", "turn_idx", "extracted_text")
+      .collect().map(_.toSeq).toSet
+    assert(viaOrc == direct && viaOrc.nonEmpty)
   }
 }

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * column pruning into the parquet scan, top-k without a global sort,
   * and the extraction pipeline's single shuffle.
   */
-class PlanShapeSpec extends AnyFunSuite {
+class PlanShapeSpec extends AnyFunSuite with SparkSessionFixture.TempDirs {
   private lazy val spark = SparkSessionFixture.spark
   private val dir = "/root/testdata/sf0.001"
 
@@ -458,7 +458,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("ivf index scan: probing prunes parquet partitions at the scan") {
-    val base = java.nio.file.Files.createTempDirectory("graft-ivf-idx-plan").toString
+    val base = tempDir("graft-ivf-idx-plan").toString
     val p = plan(graft.ops.SimilarityOps.ivfIndexedTopK(spark, dir, base))
     // the probed-cell filter must reach the index scan as a PARTITION
     // filter (the directories are the index structure), not a row filter
@@ -489,7 +489,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("quantized ivf index scan: probing prunes the CODE index partitions at the scan") {
-    val base = java.nio.file.Files.createTempDirectory("graft-ivf-q-plan").toString
+    val base = tempDir("graft-ivf-q-plan").toString
     val p = plan(graft.ops.SimilarityOps.ivfQuantizedIndexTopK(spark, dir, base))
     // same pruning contract as q185, now over the 4x-smaller code pages
     assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(p).isDefined,

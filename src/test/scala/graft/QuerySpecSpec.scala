@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.QuerySpec.{Oracle, RowsOnly}
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** The query contract as one list: `SparkEntry.specs` must name every
   * query once, give each an oracle or a stated reason for having none,
@@ -69,5 +70,14 @@ class QuerySpecSpec extends AnyFunSuite {
     val survey = "(\\d+)/(\\d+) driver\\s+queries".r.findFirstMatchIn(read("SURVEY.md"))
       .getOrElse(fail("SURVEY.md: no '<m>/<n> driver queries' count"))
     assert((survey.group(2).toInt, survey.group(1).toInt) == ((nQueries, nOracled)), "SURVEY.md counts drifted")
+  }
+
+  test("README's graft.<pkg> bullets name exactly the packages under src/main/scala/graft") {
+    val readme = new String(Files.readAllBytes(Paths.get("README.md")), "UTF-8")
+    val bullets = "(?m)^- `graft\\.([a-z]+)`".r.findAllMatchIn(readme).map(_.group(1)).toSet
+    val pkgs = scala.util.Using.resource(Files.list(Paths.get("src/main/scala/graft")))(
+      _.iterator().asScala.filter(Files.isDirectory(_)).map(_.getFileName.toString).toSet)
+    assert(bullets == pkgs,
+      s"README has no bullet for ${pkgs -- bullets}; bullets for missing packages ${bullets -- pkgs}")
   }
 }

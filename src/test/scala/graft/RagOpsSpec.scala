@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * of retrieval (provenance + threshold), and the IVF composition
   * (full-probe IVF == exact chunk-level top-k).
   */
-class RagOpsSpec extends AnyFunSuite {
+class RagOpsSpec extends AnyFunSuite with SparkSessionFixture.TempDirs {
   private lazy val spark = SparkSessionFixture.spark
   import spark.implicits._
 
@@ -66,7 +66,7 @@ class RagOpsSpec extends AnyFunSuite {
   }
 
   test("retrieveChunks matches a full local brute recompute (provenance + threshold)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rag").toString
+    val dir = tempDir("graft-rag").toString
     val corpus = Seq(
       (0L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (1L, "red green blue yellow purple orange pink brown black white"),

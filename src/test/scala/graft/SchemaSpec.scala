@@ -45,23 +45,6 @@ class SchemaSpec extends AnyFunSuite {
     assert(e.getMessage.contains(".id"))
   }
 
-  test("ensureColumns adds missing target columns as typed nulls, keeps data") {
-    import spark.implicits._
-    val df = Seq(("c1", 5)).toDF("conv_id", "n")
-    val target = StructType(Seq(
-      StructField("conv_id", StringType),
-      StructField("n", IntegerType),
-      StructField("added_at", TimestampType),
-      StructField("score", DoubleType)))
-    val out = SchemaOps.ensureColumns(df, target)
-    assert(out.columns.toSeq == Seq("conv_id", "n", "added_at", "score"))
-    assert(out.schema("added_at").dataType == TimestampType)
-    assert(out.schema("score").dataType == DoubleType)
-    val row = out.collect()(0)
-    assert(row.getString(0) == "c1" && row.getInt(1) == 5)
-    assert(row.isNullAt(2) && row.isNullAt(3))
-  }
-
   test("drifted-batch ingest: every conv present once, drift columns null-filled per batch") {
     import spark.implicits._
     val recs = graft.ops.ShredOps.structuredRecords(spark, 120)
@@ -102,28 +85,5 @@ class SchemaSpec extends AnyFunSuite {
     assert(got(4L) == (("unknown", None)))
     assert(got(5L) == (("unknown", None)))
     assert(got(6L) == (("unknown", None)))
-  }
-
-  test("routeBySchema: each family parses round-trip; families partition the matched set") {
-    import spark.implicits._
-    val docs = graft.synth.JsonRecords.docs(spark, 100)
-    val routed = SchemaOps.routeBySchema(docs, "payload")
-    assert(routed.map(_._1) == Seq("material_usage", "step", "temperature"))
-    val counts = routed.map { case (n, df) => n -> df.count() }.toMap
-    // generator plants ids ≡ {0,3} mod 5 as material (+ ambiguous ids ≡ 4
-    // mod 5 with id % 4 == 0), ≡ 1 as step, ≡ 2 as temperature
-    val expMaterial = (0L until 100L).count(id =>
-      id % 5 == 0 || id % 5 == 3 || (id % 5 == 4 && id % 4 == 0)).toLong
-    assert(counts("material_usage") == expMaterial)
-    assert(counts("step") == (0L until 100L).count(_ % 5 == 1).toLong)
-    assert(counts("temperature") == (0L until 100L).count(_ % 5 == 2).toLong)
-    // routed frames carry the parsed typed fields
-    val step = routed.find(_._1 == "step").get._2
-    assert(step.columns.toSeq == Seq("rec_id", "step_no", "description"))
-    assert(step.filter(col("step_no").isNull).count() == 0)
-    // classified + unknown partitions cover the corpus exactly
-    val unknown = SchemaOps.classifyJson(docs, "payload")
-      .filter(col("schema_name") === "unknown").count()
-    assert(counts.values.sum + unknown == 100L)
   }
 }

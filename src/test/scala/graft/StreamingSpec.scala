@@ -6,20 +6,19 @@ import graft.synth.SynthDataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Structured Streaming facade: file-source extraction drains to the same
-  * results as the batch pipeline; watermarked windows aggregate correctly;
-  * stateful per-conversation status tracks counts.
+  * results as the batch pipeline; watermarked event windows equal the
+  * batch aggregation; measured watermark drops follow the lagged rule.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with SparkSessionFixture.TempDirs {
   private lazy val spark = SparkSessionFixture.spark
 
   private val nConvs = 40L
 
   test("stream windowed aggregation equals batch exactly (sentinel drain closes the watermark)") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-stream-windows").toString
+    val base = tempDir("graft-stream-windows").toString
     val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     val got = StreamingExtract.eventWindows(spark, events, base)
       .as[(Long, String, Long, Long)].collect().toSet
@@ -36,7 +35,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("AvailableNow stream extracts exactly the batch pipeline's rows, and restart is exactly-once") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-stream").toString
+    val base = tempDir("graft-stream").toString
     val in = s"$base/in"; val out = s"$base/out"; val ck = s"$base/ck"
 
     // land the corpus as two separate file batches (two "tasks")
@@ -70,7 +69,7 @@ class StreamingSpec extends AnyFunSuite {
   test("curation projections run unchanged on a stream: piiRedact stream equals batch") {
     // pure per-row operators (PII redaction, quality, repetition) need no
     // state — the SAME DataFrame function applies to a readStream source
-    val base = Files.createTempDirectory("graft-stream-pii").toString
+    val base = tempDir("graft-stream-pii").toString
     val docs = graft.synth.WebDocs.docs(spark, 80)
     docs.write.parquet(s"$base/in")
     val stream = spark.readStream.schema(docs.schema).parquet(s"$base/in")
@@ -85,90 +84,9 @@ class StreamingSpec extends AnyFunSuite {
     assert(got == want && got.nonEmpty)
   }
 
-  test("watermarked windowed failure aggregation matches batch recomputation") {
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft-stream-w").toString
-    val in = s"$base/in"
-    val turns = SynthDataset.turns(spark, nConvs)
-    turns.write.parquet(in)
-
-    val stream = StreamingExtract.failureWindows(
-      StreamingExtract.readTurnStream(spark, in), "10 minutes", "5 minutes")
-    val q = stream.writeStream
-      .format("memory").queryName("fw").outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // Append mode only emits windows the watermark has passed; with a
-    // single drain the final windows may be withheld, so compare the
-    // emitted subset against the batch truth.
-    val got = spark.table("fw")
-      .select($"window.start".as("ws"), $"role", $"n_turns", $"n_failures")
-
-    val truth = Pipeline.run(spark, turns).toDF()
-      .join(turns.toDF().select($"conv_id", $"turn_idx", $"ts"), Seq("conv_id", "turn_idx"))
-      .groupBy(window($"ts", "5 minutes").getField("start").as("ws"), $"role")
-      .agg(count(lit(1)).as("n_turns"),
-        sum(when($"failure".isNotNull, 1L).otherwise(0L)).as("n_failures"))
-
-    assert(got.count() > 0, "watermark should have closed at least one window")
-    assert(got.join(truth, Seq("ws", "role"), "left_anti").isEmpty,
-      "every emitted window row must match the batch truth")
-    val mismatched = got.alias("g").join(truth.alias("t"), Seq("ws", "role"))
-      .filter($"g.n_turns" =!= $"t.n_turns" || $"g.n_failures" =!= $"t.n_failures")
-    assert(mismatched.isEmpty)
-  }
-
-  test("streaming dedup drops redelivered turns within the watermark") {
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft-stream-d").toString
-    val in = s"$base/in"
-    val turns = SynthDataset.turns(spark, 10L)
-    turns.write.parquet(in)                      // original delivery
-    turns.write.mode("append").parquet(in)       // full redelivery (at-least-once)
-
-    val q = StreamingExtract.dedupedTurnStream(
-      StreamingExtract.readTurnStream(spark, in))
-      .writeStream.format("memory").queryName("dd").outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    assert(spark.table("dd").count() === turns.count(),
-      "each (conv_id, turn_idx) must survive exactly once")
-    assert(spark.table("dd").select($"conv_id", $"turn_idx").distinct().count() === turns.count())
-  }
-
-  test("flatMapGroupsWithState conversation status converges to true per-conv counts") {
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft-stream-s").toString
-    val in = s"$base/in"
-    val turns = SynthDataset.turns(spark, nConvs)
-    turns.write.parquet(in)
-
-    val q = StreamingExtract.conversationStatus(
-      StreamingExtract.readTurnStream(spark, in), idleTimeoutMs = 0L)
-      .writeStream.format("memory").queryName("cs").outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    // last status row per conversation = final state after the drain
-    val last = spark.table("cs")
-      .groupBy($"conv_id")
-      .agg(max($"n_turns").as("n_turns"), max($"n_failures").as("n_failures"),
-        max($"max_turn_idx").as("max_turn_idx"))
-    val truth = Pipeline.run(spark, turns).toDF()
-      .groupBy($"conv_id")
-      .agg(count(lit(1)).as("n_turns"),
-        sum(when($"failure".isNotNull, 1L).otherwise(0L)).as("n_failures"),
-        max($"turn_idx").cast("int").as("max_turn_idx"))
-    assert(last.count() === nConvs)
-    assert(last.except(truth).isEmpty && truth.except(last).isEmpty)
-  }
-
   test("watermark drop audit: measured drops equal the block-prefix watermark rule") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-wm-audit").toString
+    val base = tempDir("graft-wm-audit").toString
     val ev = graft.ops.RelationalOps.stragglerStream(
       spark, graft.ops.RelationalOps.VerifyArrivalEvents)
     val got = StreamingExtract.watermarkDropAudit(spark, ev, base)

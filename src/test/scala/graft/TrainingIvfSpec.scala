@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Scala collections) and compared for full equality — the same
   * adversarial style as the minhash/simhash/brute-ANN tests in OpsSpec.
   */
-class TrainingIvfSpec extends AnyFunSuite {
+class TrainingIvfSpec extends AnyFunSuite with SparkSessionFixture.TempDirs {
 
   private lazy val spark = SparkSessionFixture.spark
   private val dir = "/root/testdata/sf0.001"
@@ -415,7 +415,7 @@ class TrainingIvfSpec extends AnyFunSuite {
 
   test("ivfIndexedTopK: persisted-index search equals the in-plan q54 search exactly") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-ivf-idx-test").toString
+    val base = tempDir("graft-ivf-idx-test").toString
     val fromIndex = SimilarityOps.ivfIndexedTopK(spark, dir, base)
       .as[(Long, Long, Int, Long)].collect().toSet
     val inPlan = SimilarityOps.ivfTopK(spark, dir)
@@ -656,7 +656,7 @@ class TrainingIvfSpec extends AnyFunSuite {
 
   test("writeShards: range-sharded, balanced, internally sorted, content-complete") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-shards").toString + "/packed"
+    val out = tempDir("graft-shards").toString + "/packed"
     val packed = TrainingOps.packSequences(spark, dir)
     TrainingOps.writeShards(packed, out, nShards = 4, orderCol = "doc_id")
     // content equality
@@ -793,7 +793,7 @@ class TrainingIvfSpec extends AnyFunSuite {
 
   test("quantized persisted index: recall clears the q156 0.8 bar; output shape exact") {
     val dir = "/root/testdata/sf0.001"
-    val base = java.nio.file.Files.createTempDirectory("graft-ivf-q-spec").toString
+    val base = tempDir("graft-ivf-q-spec").toString
     val got = graft.ops.SimilarityOps.ivfQuantizedIndexTopK(spark, dir, base)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got.length == graft.ops.SimilarityOps.NQueries.toInt)

@@ -10,12 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * java.util.regex recomputation of the PII redaction over the planted
   * corpus, URL host-normalization merges, and generator determinism.
   */
-class WebOpsSpec extends AnyFunSuite {
+class WebOpsSpec extends AnyFunSuite with SparkSessionFixture.TempDirs {
   private lazy val spark = SparkSessionFixture.spark
   import spark.implicits._
 
   private def repStats(docs: Seq[(Long, String)]): Map[Long, Row] = {
-    val dir = java.nio.file.Files.createTempDirectory("webops").toString
+    val dir = tempDir("webops").toString
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     WebOps.repetitionStats(spark, dir).collect()
@@ -110,7 +110,7 @@ class WebOpsSpec extends AnyFunSuite {
   }
 
   test("dupSpanStats counts cross-doc shared 5-grams, distinct within doc, zero under k words") {
-    val dir = java.nio.file.Files.createTempDirectory("dupspan").toString
+    val dir = tempDir("dupspan").toString
     Seq(
       1L -> "a b c d e f", // grams: "a b c d e", "b c d e f"
       2L -> "a b c d e x", // shares "a b c d e" with doc 1
@@ -132,7 +132,7 @@ class WebOpsSpec extends AnyFunSuite {
   }
 
   test("removeDupSpans: handcrafted first-occurrence-wins removal with position masks") {
-    val dir = java.nio.file.Files.createTempDirectory("remspan").toString
+    val dir = tempDir("remspan").toString
     Seq(
       1L -> "a b c d e f", // keeper of "a b c d e" (doc 1 < doc 2)
       2L -> "a b c d e x", // loses "a b c d e": tokens 1-5 masked, keeps "x"

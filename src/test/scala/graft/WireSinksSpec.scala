@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * have no DuckDB oracle per the repo invariant — they get read-back
   * tests plus PlanShapeSpec narrowness asserts).
   */
-class WireSinksSpec extends AnyFunSuite {
+class WireSinksSpec extends AnyFunSuite with SparkSessionFixture.TempDirs {
   private lazy val spark = SparkSessionFixture.spark
   import spark.implicits._
 
@@ -33,7 +33,7 @@ class WireSinksSpec extends AnyFunSuite {
       (1L, Some("it's"), Some(2.5), Some(true)),
       (2L, None: Option[String], None: Option[Double], None: Option[Boolean])
     ).toDF("id", "name", "score", "ok")
-    val out = java.nio.file.Files.createTempDirectory("graft-sqldump").toString
+    val out = tempDir("graft-sqldump").toString
     WireSinks.writeSqlDump(Seq(("t", df)), out)
     val ddl = java.nio.file.Files.readString(java.nio.file.Paths.get(out, "t", "ddl.sql")).trim
     assert(ddl.startsWith("CREATE TABLE IF NOT EXISTS t ("))
@@ -48,7 +48,7 @@ class WireSinksSpec extends AnyFunSuite {
   test("sql dump of the full shred family: counts match, bytes partition-invariant") {
     val recs = ShredOps.structuredRecords(spark, 30).toDF()
     val tables = ShredOps.shredAll(recs)
-    val out = java.nio.file.Files.createTempDirectory("graft-sqldump2").toString
+    val out = tempDir("graft-sqldump2").toString
     WireSinks.writeSqlDump(tables, out)
     tables.foreach { case (name, df) =>
       val stmts = readStmts(s"$out/$name/rows")
@@ -65,7 +65,7 @@ class WireSinksSpec extends AnyFunSuite {
   test("cypher dump: node MERGEs keyed on signature, edge MERGEs match endpoints") {
     val recs = ShredOps.structuredRecords(spark, 20).toDF()
     val (vertices, edges, props) = GraphOps.graphWithProps(recs)
-    val out = java.nio.file.Files.createTempDirectory("graft-cypher").toString
+    val out = tempDir("graft-cypher").toString
     WireSinks.writeCypherDump(recs, out)
     val nodes = readStmts(s"$out/nodes")
     val es = readStmts(s"$out/edges")
