@@ -1,9 +1,13 @@
 #!/usr/bin/env bash
 # Production launch (north rule: "launched via spark-submit on
-# multi-executor clusters"). In this sandbox there is no cluster manager;
-# on a real cluster, size with --num-executors N (and re-run with 4N to
-# reproduce the scaling-efficiency measurement graft.Bench performs
-# locally via local[4]/local[16]).
+# multi-executor clusters"). On a real cluster, size with --num-executors N
+# (and re-run with 4N). Every main builds its session through graft.Session,
+# which keeps the --master and --conf given here and fills only what is
+# unset (UTC time zone, UI off, graft SQL extensions). graft.Bench forces
+# local[N] and N shuffle partitions on its scaling passes only
+# (SPARK_GRAFT_SCALING_LOW/HIGH, default local[4]/local[16]); its corpus
+# materialization and per-query pass, and graft.Verify and graft.WireDump,
+# run on the master given here.
 #
 # Usage: scripts/submit.sh <class> [args...]
 #   e.g.  scripts/submit.sh graft.Bench
@@ -18,7 +22,4 @@ exec "${SPARK_HOME:-/opt/spark}"/bin/spark-submit \
   --class "$CLASS" \
   --master "${SPARK_MASTER:-local[32]}" \
   --conf spark.sql.shuffle.partitions="${SPARK_SHUFFLE_PARTITIONS:-32}" \
-  --conf spark.sql.session.timeZone=UTC \
-  --conf spark.sql.extensions=graft.functions.GraftExtensions \
-  --conf spark.sql.adaptive.enabled=true \
   "$JAR" "$@"

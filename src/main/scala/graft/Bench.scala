@@ -2,6 +2,7 @@ package graft
 
 import graft.pipeline.Pipeline
 import graft.synth.SynthDataset
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — one JSON line on stdout.
@@ -38,7 +39,12 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  private def session(cpus: Int): SparkSession = {
+  /** A fresh session of `cpus` width. `pinned` (the scaling passes)
+    * forces master `local[cpus]` and `cpus` shuffle partitions, so the
+    * headline's local[N]/local[4N] pair is the same under any launcher;
+    * otherwise the launcher's master and sizing are kept.
+    */
+  private def session(cpus: Int, pinned: Boolean): SparkSession = {
     // A fresh context per parallelism level: clear any stopped session so
     // getOrCreate builds a new SparkContext with the requested master.
     SparkSession.clearActiveSession()
@@ -49,16 +55,9 @@ object Bench {
     // cores with 0% steal). RAM-backed shuffle removes that variance —
     // the cluster-equivalent of local NVMe shuffle volumes.
     val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-bench-local")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", localDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    val base = new SparkConf().set("spark.local.dir", localDir)
+    if (pinned) base.setMaster(s"local[$cpus]").set("spark.sql.shuffle.partitions", cpus.toString)
+    Session.start(base, s"graft-bench-$cpus", cpus)
   }
 
   /** One full extraction pipeline pass (scan → salt → sort → fused map)
@@ -107,7 +106,7 @@ object Bench {
     // restarts (same JVM), so only the first pass per level warms up.
     // Returns (turns, seconds, stealPct-during-pass).
     def timedPass(passCpus: Int, warm: Boolean): (Long, Double, Double) = {
-      val s = session(passCpus)
+      val s = session(passCpus, pinned = true)
       if (warm) extractionRun(s, corpusDir) // warmup: JIT + codegen, full size
       val (st0, tot0) = cpuStat()
       val (n, sec) = extractionRun(s, corpusDir)
@@ -118,7 +117,7 @@ object Bench {
     }
 
     // materialize at full width (fast), then the two scaling levels
-    val sMat = session(cpus)
+    val sMat = session(cpus, pinned = false)
     materializeCorpus(sMat, nConvs, corpusDir)
     sMat.stop()
 
@@ -157,7 +156,7 @@ object Bench {
     // SPARK_GRAFT_QUERIES=0 skips the per-query pass (scaling-only
     // reruns while chasing host noise)
     val doQueries = sys.env.getOrElse("SPARK_GRAFT_QUERIES", "1") != "0"
-    val spark = session(cpus)
+    val spark = session(cpus, pinned = false)
     if (doQueries) {
       // warm the SESSION, not the query plans: the first timed query
       // otherwise absorbs one-time codegen/scan-infrastructure JIT (q01

@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod, posexplode, xxhash64}
 import java.nio.file.{Files, Paths}
@@ -124,14 +125,8 @@ object Verify {
       sys.exit(2)
     }
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(new SparkConf(), "graft-verify",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     val synthDir = Paths.get(outDir).toAbsolutePath.normalize.toString + "/_synth"
     // One try per synth table so a single failed write is attributed to

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.SparkConf
 import java.nio.file.{Files, Paths}
 
 /** Wire-format dump main: writes the shredded relational family as a
@@ -17,14 +17,8 @@ object WireDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft_wire")
     val nConvs = args.lift(1).map(_.toLong).getOrElse(SparkEntry.VerifyRecords)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(new SparkConf(), "graft-wire-dump",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
 
     // persist the shared inputs: the shred family feeds both the SQL
     // dump and the graph build, and the graph frames feed both the

@@ -90,9 +90,7 @@ object MultimodalOps {
   /** Frame sampling over an opaque binary "video" payload: fixed-size
     * windows at a stride, each "decoded" (STUB: checksum) — the
     * partition-local fan-out shape of real frame extraction (one input
-    * row → k frame rows, no shuffle). `resizeTo` then downsamples each
-    * frame payload by integer striding — the stand-in for an image
-    * resize kernel with the same signature (bytes → smaller bytes).
+    * row → k frame rows, no shuffle).
     */
   def frameSample(
       spark: SparkSession,
@@ -135,18 +133,6 @@ object MultimodalOps {
 
   def fromBase64Transport(df: DataFrame, b64Col: String, outCol: String): DataFrame =
     df.withColumn(outCol, unbase64(col(b64Col)))
-
-  /** STUB resize: keep every `factor`-th byte (real kernel would be a
-    * codec call; the Spark-side contract — binary in, binary out, same
-    * row — is the point).
-    */
-  def resizeTo(payloads: DataFrame, factor: Int): DataFrame = {
-    val resize = udf { (b: Array[Byte]) =>
-      if (b == null) null
-      else Array.tabulate(b.length / factor)(i => b(i * factor))
-    }
-    payloads.withColumn("payload", resize(col("payload")))
-  }
 
   /** Pixel plane width / planted-pixel cap / thumbnail side for
     * [[imageFeatures]].

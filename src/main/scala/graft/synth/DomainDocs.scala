@@ -1,6 +1,6 @@
 package graft.synth
 
-import graft.text.TextAlgos.mix64
+import DocDraw.draw
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Deterministic synthetic corpus for importance-based data selection
@@ -33,9 +33,6 @@ object DomainDocs {
     "click", "buy", "sale", "offer", "deal", "shop",
     "cart", "price", "free", "ship", "coupon", "brand",
     "store", "banner", "trend", "gift")
-
-  private def draw(id: Long, tag: Long, n: Int): Int =
-    Math.floorMod(mix64(id * 0x9e3779b97f4a7c15L + tag), n.toLong).toInt
 
   /** Percent chance a word is drawn from the target vocabulary. */
   def affinity(id: Long): Int =

@@ -1,6 +1,6 @@
 package graft.synth
 
-import graft.text.TextAlgos.mix64
+import DocDraw.draw
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Deterministic mixed-shape JSON payloads for the schema-identification
@@ -25,9 +25,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Jackson parse and DuckDB's JSON reader (no float-format parity risk).
   */
 object JsonRecords {
-
-  private def draw(id: Long, tag: Long, n: Int): Int =
-    Math.floorMod(mix64(id * 0x9e3779b97f4a7c15L + tag), n.toLong).toInt
 
   /** Pure payload builder — single source of truth for the Spark table,
     * the materialized oracle table, and test-side recomputation.

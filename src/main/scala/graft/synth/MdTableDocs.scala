@@ -1,6 +1,6 @@
 package graft.synth
 
-import graft.text.TextAlgos.mix64
+import DocDraw.{draw, word}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Deterministic synthetic markdown pipe-table corpus (q135) — the
@@ -24,25 +24,20 @@ object MdTableDocs {
     "amber", "basalt", "cedar", "dune", "ember", "fjord",
     "garnet", "heath", "inlet", "jasper", "krill", "lagoon")
 
-  private def draw(id: Long, tag: Long, n: Int): Int =
-    Math.floorMod(mix64(id * 0x9e3779b97f4a7c15L + tag), n.toLong).toInt
-
-  private def word(id: Long, tag: Long): String = vocab(draw(id, tag, vocab.length))
-
   /** Pure builder: (markdown, expected cells) from the same draws. */
   def build(id: Long): (String, Seq[GoldenCell]) = {
     val cells = scala.collection.mutable.ArrayBuffer.empty[GoldenCell]
     val sb = new StringBuilder
-    sb ++= s"intro ${word(id, 0x01)} prose line\n\n"
+    sb ++= s"intro ${word(vocab, id, 0x01)} prose line\n\n"
     sb ++= "```\n| fake | table |\n|---|---|\n| in | fence |\n```\n"
-    sb ++= s"| looks like a row but has no separator\nplain ${word(id, 0x02)} text\n\n"
+    sb ++= s"| looks like a row but has no separator\nplain ${word(vocab, id, 0x02)} text\n\n"
 
     val ragged = id % 3 == 0
     val dataRows = 2 + draw(id, 0x10, 3) // 2..4
     val cols = 2 + draw(id, 0x11, 2) // 2..3
 
     def emitTable(tIdx: Int, rows: Int, nCols: Int, base: Long, raggedLast: Boolean): Unit = {
-      val heads = (0 until nCols).map(c => word(id, base + c))
+      val heads = (0 until nCols).map(c => word(vocab, id, base + c))
       sb ++= heads.mkString("| ", " | ", " |\n")
       heads.zipWithIndex.foreach { case (h, c) =>
         cells += GoldenCell(id, tIdx, 0, c, is_header = true, h)
@@ -55,8 +50,8 @@ object MdTableDocs {
         val n = if (short) nCols - 1 else nCols
         val row = (0 until n).map { c =>
           val tag = base + 0x100 + 31L * r + c
-          val w = word(id, tag)
-          val w2 = word(id, tag + 7)
+          val w = word(vocab, id, tag)
+          val w2 = word(vocab, id, tag + 7)
           val (markup, expected) = (r + c) % 5 match {
             case 0 => (s"$w\\|$w2", s"$w|$w2")
             case 1 => (s"**$w** $w2", s"$w $w2")
@@ -73,7 +68,7 @@ object MdTableDocs {
 
     emitTable(0, dataRows, cols, 0x1000, ragged)
     if (id % 2 == 0) {
-      sb ++= s"more ${word(id, 0x03)} prose\n\n"
+      sb ++= s"more ${word(vocab, id, 0x03)} prose\n\n"
       emitTable(1, 2, 2, 0x4000, raggedLast = false)
     }
     (sb.toString, cells.toSeq)

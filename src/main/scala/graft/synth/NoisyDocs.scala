@@ -1,6 +1,6 @@
 package graft.synth
 
-import graft.text.TextAlgos.mix64
+import DocDraw.word
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Deterministic synthetic corpus with PLANTED encoding damage for the
@@ -26,17 +26,14 @@ object NoisyDocs {
     "alpha", "beta", "gamma", "delta", "epsilon", "zeta",
     "eta", "theta", "iota", "kappa", "lambda", "sigma")
 
-  private def word(id: Long, tag: Long): String =
-    vocab(Math.floorMod(mix64(id * 0x9e3779b97f4a7c15L + tag), vocab.length.toLong).toInt)
-
   def text(id: Long): String = {
     val sb = new StringBuilder
-    sb ++= word(id, 1); sb += ' '
+    sb ++= word(vocab, id, 1); sb += ' '
     if (id % 3 == 0) sb += '\ufffd'
-    sb ++= word(id, 2); sb += ' '
-    if (id % 4 == 1) { sb += '\u0001'; sb ++= word(id, 3); sb += '\u0007'; sb += '\u007f' }
-    if (id % 5 == 2) { sb += '\u00a0'; sb ++= word(id, 4); sb += '\u200b' }
-    sb ++= word(id, 5)
+    sb ++= word(vocab, id, 2); sb += ' '
+    if (id % 4 == 1) { sb += '\u0001'; sb ++= word(vocab, id, 3); sb += '\u0007'; sb += '\u007f' }
+    if (id % 5 == 2) { sb += '\u00a0'; sb ++= word(vocab, id, 4); sb += '\u200b' }
+    sb ++= word(vocab, id, 5)
     if (id % 7 == 3) sb ++= " caf\u00e9 na\u00efve"
     if (id % 3 == 0) sb ++= "\ufffd\ufffd"
     sb.toString

@@ -1,6 +1,6 @@
 package graft.synth
 
-import graft.text.TextAlgos.mix64
+import DocDraw.word
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Deterministic synthetic heading corpus for the document-outline
@@ -32,11 +32,6 @@ object OutlineDocs {
     "alpha", "beta", "gamma", "delta", "epsilon", "zeta",
     "eta", "theta", "iota", "kappa", "lambda", "sigma")
 
-  private def draw(id: Long, tag: Long, n: Int): Int =
-    Math.floorMod(mix64(id * 0x9e3779b97f4a7c15L + tag), n.toLong).toInt
-
-  private def word(id: Long, tag: Long): String = vocab(draw(id, tag, vocab.length))
-
   /** Pure builder: (kind, text, expected sections). */
   def build(id: Long): (String, String, Seq[GoldenSection]) =
     if (id % 2 == 0) buildHtml(id)
@@ -46,9 +41,9 @@ object OutlineDocs {
     val out = scala.collection.mutable.ArrayBuffer.empty[GoldenSection]
     def sec(level: Int, title: String, path: String): Unit =
       out += GoldenSection(id, out.length, level, title, path)
-    val t1 = word(id, 0x01); val t2 = word(id, 0x02)
-    val t3 = word(id, 0x03); val t4 = word(id, 0x04)
-    val t5 = word(id, 0x05); val t6 = word(id, 0x06); val t7 = word(id, 0x07)
+    val t1 = word(vocab, id, 0x01); val t2 = word(vocab, id, 0x02)
+    val t3 = word(vocab, id, 0x03); val t4 = word(vocab, id, 0x04)
+    val t5 = word(vocab, id, 0x05); val t6 = word(vocab, id, 0x06); val t7 = word(vocab, id, 0x07)
     val sb = new StringBuilder
     sb ++= "<html><head><script>var s = \"<h1>fake</h1>\";</script>"
     sb ++= "<style>h1 { color: red; }</style></head><body>"
@@ -56,7 +51,7 @@ object OutlineDocs {
     val h1 = s"$t1 & $t2"
     sb ++= s"<h1> $t1 &amp; <b>$t2</b> </h1>"
     sec(1, h1, h1)
-    sb ++= s"<p>intro ${word(id, 0x11)} paragraph</p>"
+    sb ++= s"<p>intro ${word(vocab, id, 0x11)} paragraph</p>"
     val h2a = s"$t3 $t4"
     sb ++= s"<h2>$t3 $t4</h2><p>body text</p>"
     sec(2, h2a, s"$h1 > $h2a")
@@ -68,7 +63,7 @@ object OutlineDocs {
       sb ++= s"<h3>$t5 &#65;</h3>"
       sec(3, h3, s"$h1 > $h2a > $h3")
     }
-    sb ++= s"<p>more ${word(id, 0x12)} prose</p>"
+    sb ++= s"<p>more ${word(vocab, id, 0x12)} prose</p>"
     if (id % 10 == 0) { // unclosed h2: flushed by the next block tag
       sb ++= s"<h2>$t6<p>after paragraph</p>"
       sec(2, t6, s"$h1 > $t6")
@@ -105,13 +100,13 @@ object OutlineDocs {
       lines += l
       if (bodies.nonEmpty) bodies.last += l
     }
-    val t1 = word(id, 0x21); val t2 = word(id, 0x22)
-    val t3 = word(id, 0x23); val t4 = word(id, 0x24)
-    val t5 = word(id, 0x25); val t6 = word(id, 0x26)
+    val t1 = word(vocab, id, 0x21); val t2 = word(vocab, id, 0x22)
+    val t3 = word(vocab, id, 0x23); val t4 = word(vocab, id, 0x24)
+    val t5 = word(vocab, id, 0x25); val t6 = word(vocab, id, 0x26)
     val links = scala.collection.mutable.ArrayBuffer.empty[GoldenMdLink]
     def link(href: String, anchor: String): Unit =
       links += GoldenMdLink(id, links.length, href, anchor)
-    body(s"intro prose ${word(id, 0x31)} line")
+    body(s"intro prose ${word(vocab, id, 0x31)} line")
     val h1 = s"$t1 $t2"
     lines += s"# $t1 $t2"
     sec(1, h1, h1)
@@ -119,7 +114,7 @@ object OutlineDocs {
     body("## fake heading inside fence")
     body("[fenced](https://fence.example/no) is not a link")
     body("```")
-    val lw = word(id, 0x33)
+    val lw = word(vocab, id, 0x33)
     body(s"see [$lw docs](https://docs${id % 5}.example/page/$id) here")
     link(s"https://docs${id % 5}.example/page/$id", s"$lw docs")
     val h2a = s"$t3 $t4"
@@ -141,7 +136,7 @@ object OutlineDocs {
     if (id % 6 == 5) body("####### seven hashes is prose")
     body(s"![diagram](/img/$id.png) and [**$t5** rel](/rel/$id)")
     link(s"/rel/$id", s"$t5 rel")
-    body(s"body prose ${word(id, 0x32)}")
+    body(s"body prose ${word(vocab, id, 0x32)}")
     lines += s"## $t6"
     sec(2, t6, s"$h1 > $t6")
     body("tail prose")

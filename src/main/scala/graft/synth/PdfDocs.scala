@@ -1,6 +1,6 @@
 package graft.synth
 
-import graft.text.TextAlgos.mix64
+import DocDraw.{draw, word}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
 
@@ -43,9 +43,6 @@ object PdfDocs {
     "stream", "object", "layout", "render", "glyph", "serif",
     "kern", "recto", "verso", "folio", "octavo", "quire")
 
-  private def draw(id: Long, tag: Long, n: Int): Int =
-    Math.floorMod(mix64(id * 0x9e3779b97f4a7c15L + tag), n.toLong).toInt
-
   /** One planned run: page (0-based), column, PDF-space position, text. */
   final case class Planned(page: Int, col: Int, x: Int, yPdf: Int, text: String)
 
@@ -81,7 +78,7 @@ object PdfDocs {
   private def lineText(id: Long, p: Int, c: Int, l: Int): String = {
     val n = 2 + draw(id, 0x60 + 31 * l + 7 * p + c, 4)
     val words = (0 until n)
-      .map(w => vocab(draw(id, 0x70 + 131 * l + 17 * p + 5 * c + w, vocab.length)))
+      .map(w => word(vocab, id, 0x70 + 131 * l + 17 * p + 5 * c + w))
     val base = words.mkString(" ")
     draw(id, 0x80 + l + p, 5) match {
       case 0 => base + " (nb: " + draw(id, 0x90, 100) + ")" // parens need escaping

@@ -1,6 +1,6 @@
 package graft.synth
 
-import graft.text.TextAlgos.mix64
+import DocDraw.{draw, word}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Deterministic synthetic positioned-run (PDF-IR) corpus with PLANTED
@@ -31,11 +31,6 @@ object PdfGridDocs {
     "alpha", "beta", "gamma", "delta", "epsilon", "zeta",
     "eta", "theta", "iota", "kappa", "lambda", "sigma")
 
-  private def draw(id: Long, tag: Long, n: Int): Int =
-    Math.floorMod(mix64(id * 0x9e3779b97f4a7c15L + tag), n.toLong).toInt
-
-  private def word(id: Long, tag: Long): String = vocab(draw(id, tag, vocab.length))
-
   /** Pure builder: (run stream, expected cells). */
   def build(id: Long): (String, Seq[GoldenGridCell]) = {
     val cells = mutable()
@@ -43,7 +38,7 @@ object PdfGridDocs {
     var tableIdx = 0
 
     def proseLine(page: Int, x: Int, y: Int, tag: Long): Unit =
-      lines += s"""p$page $x $y "prose ${word(id, tag)} text""""
+      lines += s"""p$page $x $y "prose ${word(vocab, id, tag)} text""""
 
     // page 0: prose + table A
     proseLine(0, 100, 10, 0x01)
@@ -52,7 +47,7 @@ object PdfGridDocs {
     val aCols = 2 + draw(id, 0x11, 2) // 2..3
     val aXs = Seq(300, 520, 740).take(aCols)
     for (r <- 0 until aRows; c <- 0 until aCols) {
-      val w = word(id, 0x100 + 31L * r + c)
+      val w = word(vocab, id, 0x100 + 31L * r + c)
       val conf = if ((r + c) % 4 == 0) s" (Confidence: 0.9${(r + c) % 10})" else ""
       lines += s"""p0 ${aXs(c)} ${400 + 60 * r} "$w$conf""""
       cells += GoldenGridCell(id, 0, tableIdx, r, c, w)
@@ -65,28 +60,28 @@ object PdfGridDocs {
       val xs = Seq(150, 400)
       for (r <- 0 until 5) {
         for (c <- 0 until 2) {
-          val w = word(id, 0x200 + 17L * r + c)
+          val w = word(vocab, id, 0x200 + 17L * r + c)
           lines += s"""p1 ${xs(c)} ${100 + 60 * r} "$w""""
         }
       }
       proseLine(1, 250, 100 + 60 * 2 + 30, 0x04) // y=250: between rows 2 and 3
       for (r <- 0 until 3; c <- 0 until 2)
-        cells += GoldenGridCell(id, 1, tableIdx, r, c, word(id, 0x200 + 17L * r + c))
+        cells += GoldenGridCell(id, 1, tableIdx, r, c, word(vocab, id, 0x200 + 17L * r + c))
       tableIdx += 1
       for (r <- 3 until 5; c <- 0 until 2)
-        cells += GoldenGridCell(id, 1, tableIdx, r - 3, c, word(id, 0x200 + 17L * r + c))
+        cells += GoldenGridCell(id, 1, tableIdx, r - 3, c, word(vocab, id, 0x200 + 17L * r + c))
       tableIdx += 1
     }
     if (id % 4 == 0) {
       // a single 2-run line: signature occurs once — not a table
-      lines += s"""p0 150 950 "${word(id, 0x05)}""""
-      lines += s"""p0 450 950 "${word(id, 0x06)}""""
+      lines += s"""p0 150 950 "${word(vocab, id, 0x05)}""""
+      lines += s"""p0 450 950 "${word(vocab, id, 0x06)}""""
     }
     if (id % 5 == 0) {
       // page 2: two ADJACENT 2x2 grids with different x-signatures
       for ((xs, t) <- Seq(Seq(100, 300) -> 0, Seq(120, 320) -> 1)) {
         for (r <- 0 until 2; c <- 0 until 2) {
-          val w = word(id, 0x300 + 13L * (t * 2 + r) + c)
+          val w = word(vocab, id, 0x300 + 13L * (t * 2 + r) + c)
           lines += s"""p2 ${xs(c)} ${100 + 200 * t + 60 * r} "$w""""
           cells += GoldenGridCell(id, 2, tableIdx + t, r, c, w)
         }
@@ -110,11 +105,11 @@ object PdfGridDocs {
     var tableIdx = 0
     def jit(tag: Long): Int = draw(id, tag, 3) - 1 // -1, 0, +1
 
-    lines += s"""p0 100 10 "prose ${word(id, 0x01)} text""""
+    lines += s"""p0 100 10 "prose ${word(vocab, id, 0x01)} text""""
     val rows = 3 + draw(id, 0x10, 3) // 3..5
     val xs = Seq(300, 520, 740)
     for (r <- 0 until rows; c <- 0 until 3) {
-      val w = word(id, 0x100 + 31L * r + c)
+      val w = word(vocab, id, 0x100 + 31L * r + c)
       lines += s"""p0 ${xs(c) + jit(0x500 + 31L * r + c)} ${400 + 60 * r} "$w""""
       cells += GoldenGridCell(id, 0, tableIdx, r, c, w)
     }
@@ -124,7 +119,7 @@ object PdfGridDocs {
       // jittered within each band, never across
       val nxs = Seq(200, 205, 400)
       for (r <- 0 until 2; c <- 0 until 3) {
-        val w = word(id, 0x200 + 17L * r + c)
+        val w = word(vocab, id, 0x200 + 17L * r + c)
         // jitter only the wide column; the 5-px pair stays exact so the
         // band gap (5 - 0 = 5 > 3) is unambiguous by construction
         val j = if (c == 2) jit(0x600 + 17L * r + c) else 0
@@ -133,7 +128,7 @@ object PdfGridDocs {
       }
       tableIdx += 1
     }
-    lines += s"""p0 90 900 "tail ${word(id, 0x02)} prose""""
+    lines += s"""p0 90 900 "tail ${word(vocab, id, 0x02)} prose""""
     (lines.mkString("\n"), cells.toSeq)
   }
 

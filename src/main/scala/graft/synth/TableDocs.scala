@@ -1,6 +1,6 @@
 package graft.synth
 
-import graft.text.TextAlgos.mix64
+import DocDraw.{draw, word}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Deterministic synthetic HTML-table corpus for the structured-table
@@ -38,11 +38,6 @@ object TableDocs {
     "alpha", "beta", "gamma", "delta", "epsilon", "zeta",
     "eta", "theta", "iota", "kappa", "lambda", "sigma")
 
-  private def draw(id: Long, tag: Long, n: Int): Int =
-    Math.floorMod(mix64(id * 0x9e3779b97f4a7c15L + tag), n.toLong).toInt
-
-  private def word(id: Long, tag: Long): String = vocab(draw(id, tag, vocab.length))
-
   /** Pure builder: (html, expected cells, expected links) from the same
     * draws. The link surface (q136) is planted in the boilerplate AROUND
     * the tables, so the cell goldens are untouched by it: varied hosts,
@@ -61,8 +56,8 @@ object TableDocs {
     sb ++= "<nav><ul><li><a href=\"/home\">home</a></li><li><a href=\"/x\">x</a></li></ul></nav>"
     link("/home", "home")
     link("/x", "x")
-    sb ++= s"<p>intro ${word(id, 0x01)} ${word(id, 0x02)} paragraph</p>"
-    val lw1 = word(id, 0x05); val lw2 = word(id, 0x06)
+    sb ++= s"<p>intro ${word(vocab, id, 0x01)} ${word(vocab, id, 0x02)} paragraph</p>"
+    val lw1 = word(vocab, id, 0x05); val lw2 = word(vocab, id, 0x06)
     sb ++= s"""<a href="https://Site${id % 7}.example/p/$id?a=1&amp;b=2">$lw1 <b>$lw2</b></a>"""
     link(s"https://Site${id % 7}.example/p/$id?a=1&b=2", s"$lw1 $lw2")
     if (id % 3 == 0) {
@@ -107,7 +102,7 @@ object TableDocs {
     sb ++= "<table>"
     sb ++= "<tr>"
     for (c <- 0 until cols) {
-      val w = word(id, 0x1000 + c)
+      val w = word(vocab, id, 0x1000 + c)
       sb ++= s"<th> $w </th>"
       cells += GoldenCell(id, 0, 0, c, is_header = true, w)
     }
@@ -117,15 +112,15 @@ object TableDocs {
       for (c <- 0 until cols) {
         val tag = 0x2000 + 31L * r + c
         if (nested && r == 2 && c == 0) {
-          val w1 = word(id, 0x3001)
-          val w2 = word(id, 0x3002)
+          val w1 = word(vocab, id, 0x3001)
+          val w2 = word(vocab, id, 0x3002)
           sb ++= s"<td>pre <table><tr><td>$w1</td><td>$w2</td></tr></table> post</td>"
           cells += GoldenCell(id, 1, 0, 0, is_header = false, w1)
           cells += GoldenCell(id, 1, 0, 1, is_header = false, w2)
           cells += GoldenCell(id, 0, r, c, is_header = false, "pre post")
         } else {
-          val w = word(id, tag)
-          val w2 = word(id, tag + 7)
+          val w = word(vocab, id, tag)
+          val w2 = word(vocab, id, tag + 7)
           val (markup, expected) = (r + c) % 5 match {
             case 0 => (s"$w&amp;$w2", s"$w&$w2")
             case 1 => (s"<b>$w</b> $w2", s"$w $w2")
@@ -148,7 +143,7 @@ object TableDocs {
       for (r <- 0 until 2) {
         sb ++= "<tr>"
         for (c <- 0 until 2) {
-          val w = word(id, 0x4000 + 13L * r + c)
+          val w = word(vocab, id, 0x4000 + 13L * r + c)
           sb ++= s"<td>$w</td>"
           cells += GoldenCell(id, tIdx, r, c, is_header = false, w)
         }

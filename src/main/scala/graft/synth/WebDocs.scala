@@ -1,6 +1,6 @@
 package graft.synth
 
-import graft.text.TextAlgos.mix64
+import DocDraw.{draw, word}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Deterministic synthetic "scraped web page" corpus for the PII-redaction
@@ -26,9 +26,6 @@ object WebDocs {
     "fetch", "parse", "robot", "cache", "header", "title", "body",
     "script", "style", "media", "frame", "query", "token")
 
-  private def draw(id: Long, tag: Long, n: Int): Int =
-    (Math.floorMod(mix64(id * 0x9e3779b97f4a7c15L + tag), n.toLong)).toInt
-
   /** Pure text builder — the single source of truth for both the Spark
     * table and the test-side local recomputation.
     */
@@ -38,7 +35,7 @@ object WebDocs {
     var i = 0
     while (i < nWords) {
       if (i > 0) sb.append(' ')
-      sb.append(vocab(draw(id, 0x20 + 31 * i, vocab.length)))
+      sb.append(word(vocab, id, 0x20 + 31 * i))
       i += 1
     }
     if (id % 3 == 0) sb.append(s" contact user$id@example${id % 7}.com")

@@ -214,13 +214,10 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions injects the function via spark.sql.extensions") {
-    // separate session sharing the context, extensions applied
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    // the shared-context session may reuse the fixture's session state;
-    // assert the function resolves through SQL either way
+    // a new session's function registry starts from the builtins plus
+    // the session extensions only: nothing registered on `spark` carries
+    // over, so the function can only come from GraftExtensions
+    val s2 = spark.newSession()
     val r = s2.sql("SELECT graft_simhash64('a b c a b') AS sh").collect()(0).getLong(0)
     assert(r == TextAlgos.simhash(TextAlgos.tokenize("a b c a b")))
   }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{Args, Outcome, Status, TestSuite, TestSuiteMixin}
 import java.nio.file.{Files, Path}
@@ -59,16 +60,7 @@ object SparkSessionFixture {
       try super.run(testName, args) finally deleteFrom(0)
   }
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.start(
+    new SparkConf().setMaster("local[4]").set("spark.sql.shuffle.partitions", "8"),
+    "graft-test", 4)
 }

@@ -7,8 +7,12 @@ For each query in <verify_out_dir>/oracle_sql.json: run the SQL in DuckDB
 with the sf parquet tables registered by name, load the Spark parquet dump,
 sort columns by name, sort rows, and compare values cell-by-cell (floats
 with exact equality first, then 1e-9 rel tolerance report).
+
+graft.Verify writes the absolute path of <verify_out_dir>/_synth into the
+oracle SQL. An oracle that reads any other `/_synth/` dir (the out dir was
+moved, so the path now names another run's tables) FAILs, naming both paths.
 """
-import sys, json, glob, math
+import sys, json, glob, math, os, re
 import duckdb
 import pyarrow.parquet as pq
 import pandas as pd
@@ -20,6 +24,16 @@ def canon(df):
     df = df.sort_values(by=list(df.columns)).reset_index(drop=True)
     return df
 
+SYNTH_DIR = re.compile(r"'([^']*/_synth)/")
+
+def foreign_synth_dir(sql, outdir):
+    """The first `_synth` dir `sql` reads that is not <outdir>/_synth, or None."""
+    own = os.path.realpath(os.path.join(outdir, "_synth"))
+    for d in SYNTH_DIR.findall(sql):
+        if os.path.realpath(d) != own:
+            return d
+    return None
+
 def main(sfdir, outdir):
     con = duckdb.connect()
     for t in TABLES:
@@ -27,6 +41,12 @@ def main(sfdir, outdir):
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
+        foreign = foreign_synth_dir(sql, outdir)
+        if foreign:
+            print(f"FAIL {name}: oracle reads synth tables at {foreign}, "
+                  f"not this run's {os.path.join(os.path.abspath(outdir), '_synth')}")
+            n_fail += 1
+            continue
         try:
             expected = con.execute(sql).fetchdf()
         except Exception as e:
