@@ -364,8 +364,7 @@ object SparkEntry {
            FROM s) t
          WHERE rank <= ${ops.SimilarityOps.DefaultK}""")),
     // AUTO-TUNED multi-table LSH (b, l derived from the sampled
-    // neighbor-agreement estimate; the fixed-default path remains as
-    // SimilarityOps.lshTopK and is covered by its ScalaTest)
+    // neighbor-agreement estimate, Hamming-1 multi-probe)
     QuerySpec("q26_ann_lsh_topk", (s, d) => SimilarityOps.lshTopKTuned(s, d), Oracle(
       s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          $lshCandidateCtes,
@@ -509,7 +508,7 @@ object SparkEntry {
          SELECT query_id,
                 first(vec_id ORDER BY l2_x10000 ASC, vec_id ASC) AS best_id,
                 min(l2_x10000) AS min_l2_x10000,
-                min(l2_x10000) <= 11000 AS accepted
+                min(l2_x10000) <= ${ops.SimilarityOps.L2AcceptX10000} AS accepted
          FROM s GROUP BY 1""")),
     QuerySpec("q43_schema_evolution", (s, _) =>
       SchemaOps.schemaEvolutionQueryChecked(verifyRecords(s)), Oracle(

@@ -342,7 +342,7 @@ object GraftFunctions {
   /** Array column of all `nTables` per-table LSH buckets of `embCol`
     * (table t = disjoint plane family [t*nPlanes, (t+1)*nPlanes)) — the
     * ONE definition of the multi-table plane-family layout on the engine
-    * side, shared by lshTopK and embeddingDupPairs; the oracle-side twin
+    * side, shared by lshTopKTuned and embeddingDupPairs; the oracle-side twin
     * is SparkEntry's bucketSqlExpr/anyTableMatchSql.
     */
   def tableBuckets(embCol: String, nPlanes: Int, nTables: Int): org.apache.spark.sql.Column =

@@ -15,9 +15,7 @@ import org.apache.spark.sql.expressions.Window
   * (one posexplode, no shuffle of text); retrieval broadcasts the query
   * chunks and scores corpus chunks in-map (bruteTopK's shape), so the
   * corpus never crosses an exchange; the window top-k survives as a
-  * partial WindowGroupLimit. For web-scale corpora the SAME chunk-vector
-  * frame feeds the IVF scale path via `SimilarityOps.ivfTopKOf`
-  * ([[retrieveIvf]]), cutting candidates to nProbe/nList of the corpus.
+  * partial WindowGroupLimit.
   *
   * Scoring is `cos²·10000` in EXACT integer arithmetic (counts are
   * integers, so dot and norms are exact longs) — engine-independent, no
@@ -135,9 +133,8 @@ object RagOps {
     * by that best score. `accepted` applies the similarity threshold (the
     * reference drops retrievals under 0.95 cosine).
     *
-    * Brute exact baseline (query side broadcast, corpus scanned once,
-    * in-map scoring, partial top-k) — the IVF-composed scale path is
-    * [[retrieveIvf]].
+    * Brute exact baseline: query side broadcast, corpus scanned once,
+    * in-map scoring, partial top-k.
     */
   def retrieveChunks(
       spark: SparkSession, dir: String,
@@ -181,43 +178,5 @@ object RagOps {
         col("q_doc"), col("q_chunk"), col("rank"), col("doc_id"),
         col("best_chunk_idx"), col("best_start_tok"), col("cos2_x10000"),
         (col("cos2_x10000") >= thresholdX10000).as("accepted"))
-  }
-
-  /** The IVF-composed scale path: the SAME chunk-vector frame, keyed by a
-    * dense synthetic vec_id and cast to array<float> (counts are small
-    * integers — exact in float), fed through `SimilarityOps.ivfTopKOf`.
-    * At 100 TB the chunk index is the write-once cell-partitioned IVF
-    * index; queries probe nProbe cells instead of scanning every chunk.
-    * Chunk provenance decodes back out of the vec_id.
-    */
-  def retrieveIvf(
-      spark: SparkSession, dir: String,
-      k: Int = RagK,
-      nQueryDocs: Long = RagNQueryDocs,
-      chunkSize: Int = VerifyChunkSize,
-      chunkOverlap: Int = VerifyChunkOverlap,
-      nList: Int = SimilarityOps.IvfNList,
-      nProbe: Int = SimilarityOps.IvfNProbe): DataFrame = {
-    val ChunkIdBase = 1L << 20 // chunk_idx < 2^20 per doc by construction
-    val chunks = chunkVectors(
-      RelationalOps.table(spark, dir, "documents"), chunkSize, chunkOverlap)
-      .select(
-        (col("doc_id") * ChunkIdBase + col("chunk_idx")).as("vec_id"),
-        col("doc_id"), col("chunk_idx"), col("start_tok"),
-        expr("transform(vec, x -> cast(x as float))").as("embedding"))
-    val corpus = chunks.filter(col("doc_id") >= nQueryDocs)
-      .select(col("vec_id"), col("embedding"))
-    val queries = chunks.filter(col("doc_id") < nQueryDocs)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    // `div`, not `/`: Column `/` promotes long to double, which rounds
-    // once vec_id exceeds 2^53 (doc_id >= 2^33) and mis-decodes provenance
-    SimilarityOps.ivfTopKOf(corpus, queries, k, nList, nProbe)
-      .select(
-        expr(s"query_id div ${ChunkIdBase}L").as("q_doc"),
-        pmod(col("query_id"), lit(ChunkIdBase)).cast("int").as("q_chunk"),
-        col("rank"),
-        expr(s"neighbor_id div ${ChunkIdBase}L").as("doc_id"),
-        pmod(col("neighbor_id"), lit(ChunkIdBase)).cast("int").as("chunk_idx"),
-        col("cosine_x10000"))
   }
 }

@@ -15,6 +15,38 @@ object RelationalOps {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** Scale-safe GLOBAL running value in `order`, the two-phase shape
+    * behind `ShredOps.registry`, `TrainingOps.packSequences` and WebOps'
+    * remainder ranks: range-partition the frame in `order`, evaluate the
+    * window function `local` within each partition in that order, and add
+    * a driver prefix-sum offset, the sum of `weight` over all earlier
+    * partitions (a tiny per-partition table). `offset(part) + local`
+    * equals `local` over the global order for ANY sampled boundary set
+    * (ranges are contiguous in `order`), so no single partition ever
+    * carries the whole frame. The localCheckpoint pins one sampled
+    * boundary set so the totals pass and the final pass agree. Returns
+    * `df`'s columns plus `out`.
+    */
+  private[ops] def twoPhaseGlobal(
+      df: DataFrame, order: Seq[Column], weight: Column, local: Column, out: String): DataFrame = {
+    val spark = df.sparkSession
+    val ranged = df.repartitionByRange(order: _*)
+      .withColumn("part", spark_partition_id())
+      .localCheckpoint()
+    val totals = ranged.groupBy(col("part")).agg(sum(weight).as("w"))
+      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+    val offsets = totals.scanLeft((Int.MinValue, 0L)) {
+      case ((_, acc), (p, n)) => (p, acc + n)
+    }.sliding(2).collect { case Array((_, off), (p, _)) => (p, off) }.toMap
+    val offsetDf = spark.createDataFrame(
+      if (offsets.isEmpty) Seq((0, 0L)) else offsets.toSeq).toDF("part", "offset")
+    ranged
+      .withColumn("local_acc", local.over(Window.partitionBy(col("part")).orderBy(order: _*)))
+      .join(broadcast(offsetDf), "part")
+      .withColumn(out, col("offset") + col("local_acc"))
+      .drop("part", "local_acc", "offset")
+  }
+
   private def dec(c: Column): Column = c.cast("decimal(18,2)")
 
   /** A1: hash aggregation with partial+final combine (the reference's

@@ -4,7 +4,6 @@ import graft.model._
 import graft.synth.Synth
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Nested-record shredding, registry, rules and delete — the relational
   * sink side of the engine (ref: agents/sql_agent/json_to_db.py:49-83
@@ -118,37 +117,20 @@ object ShredOps {
     * (reproducible, unlike lastrowid / monotonically_increasing_id;
     * ref: json_to_db.py:36-47).
     *
-    * Scale-safe two-phase assignment of the GLOBAL rank by conv_id: a
-    * single global-order row_number would funnel all keys through ONE
-    * partition, so instead keys are range-partitioned (contiguous,
-    * ordered key ranges per partition), each partition numbers its own
-    * keys, and a driver-computed prefix sum over the tiny per-partition
-    * count table supplies the offsets. `reg_id = offset(part) + local_rn`
-    * equals row_number over the global conv_id order for ANY choice of
-    * range boundaries, so the output is deterministic even though
-    * repartitionByRange samples boundaries; the localCheckpoint pins one
-    * sampled boundary set so the count pass and the final pass agree.
+    * Scale-safe two-phase assignment of the GLOBAL rank by conv_id
+    * (`RelationalOps.twoPhaseGlobal`): a single global-order row_number
+    * would funnel all keys through ONE partition, so instead keys are
+    * range-partitioned, each partition numbers its own keys, and a
+    * driver-computed prefix sum over the per-partition counts supplies
+    * the offsets. `reg_id = offset(part) + local_rn` equals row_number
+    * over the global conv_id order for ANY choice of range boundaries, so
+    * the output is deterministic even though repartitionByRange samples
+    * boundaries.
     */
-  def registry(records: DataFrame): DataFrame = {
-    val spark = records.sparkSession
-    val ranged = records.select(col("conv_id")).distinct()
-      .repartitionByRange(col("conv_id"))
-      .withColumn("part", spark_partition_id())
-      .localCheckpoint()
-    val counts = ranged.groupBy(col("part")).count()
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets = counts.scanLeft((Int.MinValue, 0L)) {
-      case ((_, acc), (p, n)) => (p, acc + n)
-    }.sliding(2).collect { case Array((_, off), (p, _)) => (p, off) }.toMap
-    val offsetDf = spark.createDataFrame(
-      if (offsets.isEmpty) Seq((0, 0L)) else offsets.toSeq).toDF("part", "offset")
-    val wp = Window.partitionBy(col("part")).orderBy(col("conv_id"))
-    ranged
-      .withColumn("local_rn", row_number().over(wp))
-      .join(broadcast(offsetDf), "part")
-      .withColumn("reg_id", (col("offset") + col("local_rn")).cast("long"))
+  def registry(records: DataFrame): DataFrame =
+    RelationalOps.twoPhaseGlobal(records.select(col("conv_id")).distinct(),
+        Seq(col("conv_id")), lit(1L), row_number(), "reg_id")
       .select(col("conv_id"), col("reg_id"))
-  }
 
   /** T5/P1-negation: rule evaluation — the persisted example workflow
     * ("actual quantities within allowed range",

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.text.TextAlgos
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -9,15 +9,24 @@ import org.apache.spark.sql.expressions.Window
   * (Array[Float] column).
   *
   * - bruteTopK: the exact baseline — broadcast the (small) query set,
-  *   score every (query, vector) pair with a typed map, take top-k per
-  *   query with a window. One scan of the corpus, no corpus-side shuffle
-  *   except the final per-query top-k (k rows per query survive the
-  *   partial TakeOrdered).
-  * - lshTopK: a scale path — sign-bit hyperplane buckets; only same-
-  *   bucket pairs are scored. Recall<1, cost ~ corpus/2^planes per query.
+  *   score every (query, vector) pair, take top-k per query with a
+  *   window. One scan of the corpus, no corpus-side shuffle except the
+  *   final per-query top-k (k rows per query survive the partial
+  *   TakeOrdered).
+  * - lshTopKTuned: a scale path — sign-bit hyperplane buckets with
+  *   auto-tuned (planes, tables) and Hamming-1 multi-probe; only
+  *   colliding pairs are scored. Recall<1, cost ~ corpus/2^planes per
+  *   table per query.
   * - ivfTopK: the other scale path — IVF with LEARNED coarse centroids
-  *   (Lloyd iterations), nProbe cells searched per query. Data-adaptive
+  *   (Lloyd iterations), IvfNProbe cells searched per query. Data-adaptive
   *   where the hyperplane buckets are data-oblivious.
+  *
+  * Every search runs at the fixed constants below (DefaultK, NQueries,
+  * Ivf*), and each shared decision has one private definition: the query
+  * set ([[querySet]]), the per-query rank window ([[perQuery]]), the IVF
+  * probe rule ([[probe]]), the int8 code scoring ([[codeTopK]]), the
+  * persisted cell-partitioned index ([[persistedProbe]]) and the q59
+  * overlap recipe ([[hitsPerQuery]]).
   */
 object SimilarityOps {
 
@@ -25,6 +34,67 @@ object SimilarityOps {
 
   val DefaultK = 3
   val NQueries = 8
+
+  /** q42's accept threshold on floor(l2·10⁴). */
+  val L2AcceptX10000 = 11000L
+
+  private def embeddings(spark: SparkSession, dir: String): DataFrame =
+    table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
+
+  /** The query sample: the rows of `df` with vec_id < NQueries, keyed
+    * `query_id` and carrying `cols` — the ONE definition of the query set
+    * every search and recall metric runs.
+    */
+  private def querySet(df: DataFrame, cols: Column*): DataFrame =
+    df.filter(col("vec_id") < NQueries).select(col("vec_id").as("query_id") +: cols: _*)
+
+  /** Float query frame (query_id, q_embedding) over an embeddings frame. */
+  private def floatQueries(vecs: DataFrame): DataFrame =
+    querySet(vecs, col("embedding").as("q_embedding"))
+
+  /** The first `n` rows per query by `order`, numbered in `rank`
+    * (row_number, so the order's last key must break ties) — the ONE
+    * per-query rank window behind every top-k and the IVF probe.
+    */
+  private def perQuery(df: DataFrame, n: Int, order: Column*): DataFrame =
+    df.withColumn("rank", row_number().over(Window.partitionBy(col("query_id")).orderBy(order: _*)))
+      .filter(col("rank") <= n)
+
+  /** (query_id, neighbor_id, cosine_x10000) of (query, candidate) pairs,
+    * self-matches excluded, scored by the codegen'd `graft_cosine_x10000`
+    * expression (graft.functions.CosineX10000).
+    */
+  private def cosineScores(pairs: DataFrame): DataFrame =
+    pairs
+      .filter(col("query_id") =!= col("vec_id"))
+      .select(
+        col("query_id"),
+        col("vec_id").as("neighbor_id"),
+        expr("graft_cosine_x10000(q_embedding, embedding)").as("cosine_x10000"))
+
+  /** Per-query top-k of cosine scores, ties broken by neighbor id:
+    * (query_id, neighbor_id, rank, cosine_x10000).
+    */
+  private def cosineTopK(scored: DataFrame): DataFrame =
+    perQuery(scored, DefaultK, col("cosine_x10000").desc, col("neighbor_id").asc)
+      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine_x10000"))
+
+  /** Per query of the sample: `aggs` over the `approx` rows whose
+    * (query_id, neighbor_id) pair is in `exact` — the q59 overlap recipe.
+    * Zero-hit queries are kept with null aggregates (left join from the
+    * query set); both joins broadcast k·|queries|-row frames.
+    */
+  private def hitsPerQuery(
+      spark: SparkSession, dir: String,
+      approx: DataFrame, exact: DataFrame, aggs: Column*): DataFrame = {
+    val h = approx
+      .join(broadcast(exact.select(col("query_id"), col("neighbor_id"))),
+        Seq("query_id", "neighbor_id"))
+      .groupBy(col("query_id"))
+      .agg(aggs.head, aggs.tail: _*)
+    querySet(table(spark, dir, "embeddings"))
+      .join(broadcast(h), Seq("query_id"), "left")
+  }
 
   /** Exact brute-force cosine top-k. Output (query_id, neighbor_id, rank,
     * cosine_x10000), self-matches excluded, ties broken by neighbor id.
@@ -36,25 +106,10 @@ object SimilarityOps {
     * typed ser/de boundary, and the per-query top-k survives as a
     * partial WindowGroupLimit before the shuffle.
     */
-  def bruteTopK(spark: SparkSession, dir: String, k: Int = DefaultK): DataFrame = {
+  def bruteTopK(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val vecs = table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val queries = vecs
-      .filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    val scored = vecs
-      .crossJoin(broadcast(queries))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(
-        col("query_id"),
-        col("vec_id").as("neighbor_id"),
-        expr("graft_cosine_x10000(q_embedding, embedding)").as("cosine_x10000"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_x10000").desc, col("neighbor_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine_x10000"))
+    val vecs = embeddings(spark, dir)
+    cosineTopK(cosineScores(vecs.crossJoin(broadcast(floatQueries(vecs)))))
   }
 
   /** J4/F16: L2-nearest-neighbor with an accept threshold — the
@@ -64,15 +119,22 @@ object SimilarityOps {
     * corpus scan, broadcast query set, per-query argmin via min_by with
     * a deterministic tiebreak.
     */
-  /** q154: symmetric int8 embedding quantization — the 4x vector
-    * compression every 100 TB ANN deployment runs before indexing:
-    * per-vector absmax scale, `code = floor(x/amax·127 + 0.5)` (IEEE
-    * double ops in a FIXED expression order, so engine and oracle agree
-    * bit-for-bit — the q42 float-parity discipline). The audit frame
-    * carries exact-integer checks (code L1 mass, saturation count, the
-    * sha of the full code vector) instead of hauling arrays through the
-    * compare. Pure narrow projection, zero exchanges.
-    */
+  def l2NearestAccept(spark: SparkSession, dir: String): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
+    val vecs = embeddings(spark, dir)
+    vecs
+      .crossJoin(broadcast(floatQueries(vecs)))
+      .filter(col("query_id") =!= col("vec_id"))
+      .select(
+        col("query_id"), col("vec_id"),
+        expr("graft_l2_x10000(q_embedding, embedding)").as("l2_x10000"))
+      .groupBy(col("query_id"))
+      .agg(
+        min_by(col("vec_id"), struct(col("l2_x10000"), col("vec_id"))).as("best_id"),
+        min(col("l2_x10000")).as("min_l2_x10000"))
+      .withColumn("accepted", col("min_l2_x10000") <= L2AcceptX10000)
+  }
+
   /** (vec_id, codes) int8-code frame shared by q154 and q156 — ONE
     * definition of the quantizer.
     */
@@ -85,6 +147,52 @@ object SimilarityOps {
         transform(col("v"),
           x => floor(x / col("amax") * lit(127.0) + lit(0.5)).cast("int")))
 
+  /** (vec_id, codes, n2): the int8 codes with their exact squared norm —
+    * the stored side of q156's and q191's code scoring.
+    */
+  private def codeNorms(spark: SparkSession, dir: String): DataFrame =
+    codeFrame(spark, dir)
+      .select(col("vec_id"), col("codes"),
+        aggregate(transform(col("codes"), c => (c * c).cast("long")),
+          lit(0L), (a, x) => a + x).as("n2"))
+
+  /** Query side of the code scoring: (query_id, qcodes, qn2). */
+  private def codeQueries(codes: DataFrame): DataFrame =
+    querySet(codes, col("codes").as("qcodes"), col("n2").as("qn2"))
+
+  /** Per-query top-k (query_id, neighbor_id) of (query codes, stored
+    * codes) pairs by EXACT-integer signed cos² (`sign(dot)·dot²·10⁴ div
+    * (|q|²·|v|²)`), self-matches excluded, ties broken by vec_id.
+    */
+  private def codeTopK(pairs: DataFrame): DataFrame = {
+    val scored = pairs
+      .filter(col("query_id") =!= col("vec_id"))
+      .withColumn("dot",
+        aggregate(zip_with(col("qcodes"), col("codes"), (a, b) => (a * b).cast("long")),
+          lit(0L), (a, x) => a + x))
+      .withColumn("s2", when(col("dot") < 0, -1L).otherwise(1L) *
+        expr("(dot * dot * 10000) div (qn2 * n2)"))
+    perQuery(scored, DefaultK, col("s2").desc, col("vec_id").asc)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"))
+  }
+
+  /** Per-query overlap of `approx` with the float brute-force top-k:
+    * (query_id, n_overlap, recall_x10000) — the q156/q191 recall row.
+    */
+  private def overlapRecall(spark: SparkSession, dir: String, approx: DataFrame): DataFrame =
+    hitsPerQuery(spark, dir, approx, bruteTopK(spark, dir), count(lit(1)).as("hits"))
+      .select(col("query_id"), coalesce(col("hits"), lit(0L)).as("n_overlap"))
+      .withColumn("recall_x10000", expr(s"(n_overlap * 10000) div $DefaultK"))
+
+  /** q154: symmetric int8 embedding quantization — the 4x vector
+    * compression every 100 TB ANN deployment runs before indexing:
+    * per-vector absmax scale, `code = floor(x/amax·127 + 0.5)` (IEEE
+    * double ops in a FIXED expression order, so engine and oracle agree
+    * bit-for-bit — the q42 float-parity discipline). The audit frame
+    * carries exact-integer checks (code L1 mass, saturation count, the
+    * sha of the full code vector) instead of hauling arrays through the
+    * compare. Pure narrow projection, zero exchanges.
+    */
   def quantizeEmbeddings(spark: SparkSession, dir: String): DataFrame =
     codeFrame(spark, dir)
       .select(
@@ -111,62 +219,10 @@ object SimilarityOps {
     * per-query top-k as a WindowGroupLimit; the recall join touches two
     * k·|queries| frames.
     */
-  def quantizedRecall(spark: SparkSession, dir: String, k: Int = DefaultK): DataFrame = {
-    val codes = codeFrame(spark, dir)
-      .select(col("vec_id"), col("codes"),
-        aggregate(transform(col("codes"), c => (c * c).cast("long")),
-          lit(0L), (a, x) => a + x).as("n2"))
-    val queries = codes
-      .filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("codes").as("qcodes"),
-        col("n2").as("qn2"))
-    val scored = codes
-      .crossJoin(broadcast(queries))
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("dot",
-        aggregate(zip_with(col("qcodes"), col("codes"), (a, b) => (a * b).cast("long")),
-          lit(0L), (a, x) => a + x))
-      .withColumn("s2", expr("""CASE WHEN dot < 0
-          THEN -((dot * dot * 10000) div (qn2 * n2))
-          ELSE (dot * dot * 10000) div (qn2 * n2) END"""))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("s2").desc, col("vec_id").asc)
-    val quantTop = scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    val floatTop = bruteTopK(spark, dir, k)
-      .select(col("query_id"), col("neighbor_id"))
-    val overlap = floatTop.intersect(quantTop)
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_overlap"))
-    floatTop.select(col("query_id")).distinct()
-      .join(overlap, Seq("query_id"), "left")
-      .select(col("query_id"),
-        coalesce(col("n_overlap"), lit(0L)).as("n_overlap"))
-      .withColumn("recall_x10000", expr(s"(n_overlap * 10000) div $k"))
+  def quantizedRecall(spark: SparkSession, dir: String): DataFrame = {
+    val codes = codeNorms(spark, dir)
+    overlapRecall(spark, dir, codeTopK(codes.crossJoin(broadcast(codeQueries(codes)))))
   }
-
-  def l2NearestAccept(spark: SparkSession, dir: String, thresholdX10000: Long = 11000L): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    val vecs = table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val queries = vecs
-      .filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    vecs
-      .crossJoin(broadcast(queries))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(
-        col("query_id"), col("vec_id"),
-        expr("graft_l2_x10000(q_embedding, embedding)").as("l2_x10000"))
-      .groupBy(col("query_id"))
-      .agg(
-        min_by(col("vec_id"), struct(col("l2_x10000"), col("vec_id"))).as("best_id"),
-        min(col("l2_x10000")).as("min_l2_x10000"))
-      .withColumn("accepted", col("min_l2_x10000") <= thresholdX10000)
-  }
-
-  val LshNPlanes = 6
-  val LshNTables = 8
 
   // ----------------------------------------------------------------------
   // LSH auto-tuning: derive (nPlanes b, nTables L) from a sampled
@@ -310,20 +366,21 @@ object SimilarityOps {
     * per table) — candidates are all vectors within masked-bucket
     * Hamming <= 1 in any table, the set the tuner's hit model prices.
     */
-  def lshTopKTuned(spark: SparkSession, dir: String, k: Int = DefaultK): DataFrame = {
+  def lshTopKTuned(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val p = tuneLshParams(spark, dir)
     val full = graft.functions.GraftFunctions.tableBuckets(
       "embedding", TuneMaxPlanes, p.nTables)
     val masked = transform(full, x => pmod(x, lit(1 << p.nPlanes)))
-    lshTopKWithBuckets(spark, dir, k, masked, probeBits = p.nPlanes)
+    lshTopKWithBuckets(spark, dir, masked, p.nPlanes)
   }
 
-  /** Multi-table LSH ANN: `nTables` independent sign-bit hash tables
-    * (table t uses the disjoint plane family [t*nPlanes, (t+1)*nPlanes)),
-    * candidates = vectors sharing the query's bucket in ANY table
-    * (OR-amplification). Same output shape as bruteTopK (rank within the
-    * candidate set).
+  /** Multi-table LSH ANN over a per-table bucket array column:
+    * candidates = vectors whose bucket in ANY table is the query's bucket
+    * or one of its `probeBits` single-bit-flip variants (OR-amplification
+    * plus Hamming-1 multi-probe — expansion on the broadcast QUERY side
+    * only; the corpus is bucketed exactly once). Same output shape as
+    * bruteTopK (rank within the candidate set).
     *
     * Why multi-table: a single b-plane bucket finds a neighbor at angle θ
     * with probability (1-θ/π)^b — for weakly-correlated corpora (cosine
@@ -347,52 +404,17 @@ object SimilarityOps {
     * DedupOps.embeddingDupPairs, whose corpus×corpus self-join DOES
     * shuffle — there candidates are deduped narrow, before scoring.)
     */
-  def lshTopK(
-      spark: SparkSession, dir: String, k: Int = DefaultK,
-      nPlanes: Int = LshNPlanes, nTables: Int = LshNTables): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    lshTopKWithBuckets(spark, dir, k,
-      graft.functions.GraftFunctions.tableBuckets("embedding", nPlanes, nTables))
-  }
-
-  /** lshTopK core over an arbitrary per-table bucket array column.
-    * `probeBits` > 0 enables Hamming-1 multi-probe: each query row fans
-    * out to its own bucket plus the `probeBits` single-bit-flip variants —
-    * expansion on the (broadcast) QUERY side only; the corpus is bucketed
-    * exactly once either way.
-    */
   private def lshTopKWithBuckets(
-      spark: SparkSession, dir: String, k: Int,
-      buckets: org.apache.spark.sql.Column, probeBits: Int = 0): DataFrame = {
-    val vecs = table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val bucketed = vecs.select(
-      col("vec_id"), col("embedding"), posexplode(buckets).as(Seq("t", "bucket")))
-    val exactQ = bucketed
-      .filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"),
-        col("t"), col("bucket"))
-    val queries =
-      if (probeBits == 0) exactQ
-      else exactQ.select(
-        col("query_id"), col("q_embedding"), col("t"),
-        explode(array((col("bucket") +: (0 until probeBits).map(i =>
-          col("bucket").bitwiseXOR(lit(1 << i)))): _*)).as("bucket"))
-    val scored = bucketed
-      .join(broadcast(queries), Seq("t", "bucket"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(
-        col("query_id"),
-        col("vec_id").as("neighbor_id"),
-        expr("graft_cosine_x10000(q_embedding, embedding)").as("cosine_x10000"))
+      spark: SparkSession, dir: String, buckets: Column, probeBits: Int): DataFrame = {
+    val bucketed = embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding"), posexplode(buckets).as(Seq("t", "bucket")))
+    val queries = querySet(bucketed, col("embedding").as("q_embedding"), col("t"),
+      explode(array((col("bucket") +: (0 until probeBits).map(i =>
+        col("bucket").bitwiseXOR(lit(1 << i)))): _*)).as("bucket"))
+    cosineTopK(cosineScores(bucketed.join(broadcast(queries), Seq("t", "bucket")))
       // the same pair surfaces once per colliding table; the score is a
       // pure function of the pair, so dedup on all three columns is exact
-      .dropDuplicates("query_id", "neighbor_id", "cosine_x10000")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_x10000").desc, col("neighbor_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine_x10000"))
+      .dropDuplicates("query_id", "neighbor_id", "cosine_x10000"))
   }
 
   // ----------------------------------------------------------------------
@@ -436,40 +458,47 @@ object SimilarityOps {
       .groupBy(col("vec_id"))
       .agg(min_by(col("cell"), struct(col("l2_x10000"), col("cell"))).as("cell"))
 
-  /** Train the coarse quantizer: `iters` Lloyd rounds from a deterministic
-    * init (the first nList vec_ids). Returns (cell:int, centroid:float[]).
-    * Each round: assign (broadcast argmin) -> per-(cell,dim) exact
-    * fixed-point mean (posexplode -> long-sum groupBy — shuffles
-    * nList*dim aggregates, not vectors) -> reassemble. Cells that lose
-    * all members drop out (standard IVF repair is re-seeding; at nList=8
-    * on real data it does not trigger — asserted in tests).
-    * localCheckpoint per round bounds plan growth exactly like the
-    * dedupClusters iteration.
+  /** The IvfNProbe cells nearest each query by (floor(l2·10⁴), cell) —
+    * the ONE probe rule of every IVF search and of hardNegatives' anchor
+    * cells. Keeps the query frame's columns (which must include
+    * `q_embedding`) and adds `cell`; the centroids are broadcast.
     */
-  def ivfCentroids(
-      spark: SparkSession, dir: String,
-      nList: Int = IvfNList, iters: Int = IvfIters): DataFrame =
-    ivfCentroidsOf(
-      table(spark, dir, "embeddings").select(col("vec_id"), col("embedding")),
-      nList, iters)
+  private def probe(queries: DataFrame, centroids: DataFrame): DataFrame =
+    perQuery(
+      queries.crossJoin(broadcast(centroids))
+        .withColumn("l2_x10000", expr("graft_l2_x10000(q_embedding, centroid)"))
+        .drop("centroid"),
+      IvfNProbe, col("l2_x10000").asc, col("cell").asc)
+      .drop("l2_x10000", "rank")
 
-  /** [[ivfCentroids]] over any (vec_id, embedding:array<float>) frame —
-    * the generic entry the RAG chunk index composes with. Init is the
-    * nList smallest vec_ids (deterministic for any id domain).
+  /** Train the coarse quantizer over the embeddings table: IvfIters Lloyd
+    * rounds (see [[ivfCentroidsOf]]). Returns (cell:int, centroid:float[]).
     */
-  def ivfCentroidsOf(
-      vecs: DataFrame, nList: Int = IvfNList, iters: Int = IvfIters): DataFrame = {
+  def ivfCentroids(spark: SparkSession, dir: String): DataFrame =
+    ivfCentroidsOf(embeddings(spark, dir))
+
+  /** [[ivfCentroids]] over any (vec_id, embedding:array<float>) frame:
+    * IvfIters Lloyd rounds from a deterministic init (the IvfNList
+    * smallest vec_ids, so any id domain works). Each round: assign
+    * (broadcast argmin) -> per-(cell,dim) exact fixed-point mean
+    * (posexplode -> long-sum groupBy — shuffles nList*dim aggregates, not
+    * vectors) -> reassemble. Cells that lose all members drop out
+    * (standard IVF repair is re-seeding; at nList=8 on real data it does
+    * not trigger — asserted in tests). localCheckpoint per round bounds
+    * plan growth exactly like the dedupClusters iteration.
+    */
+  def ivfCentroidsOf(vecs: DataFrame): DataFrame = {
     val spark = vecs.sparkSession
     graft.functions.GraftFunctions.register(spark)
     var centroids = vecs
-      .orderBy(col("vec_id").asc).limit(nList)
+      .orderBy(col("vec_id").asc).limit(IvfNList)
       .select(
         // dense 0..nList-1 cell ids from the init ranks, so cell ids stay
         // small ints for any vec_id domain
         (row_number().over(Window.orderBy(col("vec_id").asc)) - 1).as("cell"),
         col("embedding").as("centroid"))
       .localCheckpoint(true)
-    for (_ <- 0 until iters) {
+    for (_ <- 0 until IvfIters) {
       val assigned = assignCells(vecs, centroids)
       val sums = vecs
         .join(assigned, "vec_id")
@@ -492,63 +521,28 @@ object SimilarityOps {
     centroids
   }
 
-  /** IVF search: same output shape as bruteTopK/lshTopK —
+  /** IVF search: same output shape as bruteTopK/lshTopKTuned —
     * (query_id, neighbor_id, rank, cosine_x10000), rank within the probed
     * cells. Corpus-side work is ONE assignment pass + ONE equi-join on
     * cell id against the broadcast (query, probed-cell) set.
     */
-  def ivfTopK(
-      spark: SparkSession, dir: String, k: Int = DefaultK,
-      nList: Int = IvfNList, nProbe: Int = IvfNProbe, iters: Int = IvfIters): DataFrame = {
-    val vecs = table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val queries = vecs
-      .filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    ivfTopKOf(vecs, queries, k, nList, nProbe, iters)
+  def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
+    val vecs = embeddings(spark, dir)
+    ivfTopKWith(vecs, ivfCentroidsOf(vecs))
   }
 
-  /** [[ivfTopK]] over any corpus (vec_id, embedding:array<float>) and
-    * query (query_id, q_embedding) frames — the generic entry the RAG
-    * chunk index composes with (centroids train on the corpus frame;
-    * self-matches are excluded by id).
+  /** The IVF search phase alone over the query sample of `vecs`, with
+    * PROVIDED coarse centroids — shared by the train-and-search ivfTopK
+    * and the frozen-centroid append path (q187).
     */
-  def ivfTopKOf(
-      vecs: DataFrame, queries: DataFrame, k: Int = DefaultK,
-      nList: Int = IvfNList, nProbe: Int = IvfNProbe, iters: Int = IvfIters): DataFrame =
-    ivfTopKWith(vecs, queries, ivfCentroidsOf(vecs, nList, iters), k, nProbe)
-
-  /** The IVF search phase alone, over PROVIDED coarse centroids — the
-    * entry the frozen-centroid append path (q187) shares with the
-    * train-and-search composition above. */
-  def ivfTopKWith(
-      vecs: DataFrame, queries: DataFrame, centroids: DataFrame,
-      k: Int = DefaultK, nProbe: Int = IvfNProbe): DataFrame = {
+  private def ivfTopKWith(vecs: DataFrame, centroids: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(vecs.sparkSession)
     // (vec_id, cell, embedding) — the argmin agg carries ids only; the
     // embeddings rejoin here (at scale this materializes as the
     // cell-partitioned index, written once and reused across query sets)
     val indexed = assignCells(vecs, centroids).join(vecs, "vec_id")
-    val probes = queries
-      .crossJoin(broadcast(centroids))
-      .select(col("query_id"), col("q_embedding"), col("cell"),
-        expr("graft_l2_x10000(q_embedding, centroid)").as("l2_x10000"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("l2_x10000").asc, col("cell").asc)
-    val probed = probes
-      .withColumn("pr", row_number().over(wq))
-      .filter(col("pr") <= nProbe)
-      .select(col("query_id"), col("q_embedding"), col("cell"))
-    val scored = indexed
-      .join(broadcast(probed), Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr("graft_cosine_x10000(q_embedding, embedding)").as("cosine_x10000"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_x10000").desc, col("neighbor_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine_x10000"))
+    val probed = probe(floatQueries(vecs), centroids)
+    cosineTopK(cosineScores(indexed.join(broadcast(probed), Seq("cell"))))
   }
 
   /** Recall@k of the approximate ANN paths against the exact brute-force
@@ -560,28 +554,10 @@ object SimilarityOps {
     * only for the sampled query set (NQueries rows broadcast against one
     * corpus scan per method), never corpus × corpus.
     */
-  def annRecall(spark: SparkSession, dir: String, k: Int = DefaultK): DataFrame = {
-    val exact = bruteTopK(spark, dir, k).select(col("query_id"), col("neighbor_id"))
-    val queries = table(spark, dir, "embeddings")
-      .filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"))
-    def hitsOf(approx: DataFrame, method: String): DataFrame = {
-      val h = approx
-        .select(col("query_id"), col("neighbor_id"))
-        .join(broadcast(exact), Seq("query_id", "neighbor_id"))
-        .groupBy(col("query_id"))
-        .agg(count(lit(1)).as("hits"))
-      queries
-        .join(broadcast(h), Seq("query_id"), "left")
-        .select(
-          lit(method).as("method"),
-          col("query_id"),
-          coalesce(col("hits"), lit(0L)).as("hits"),
-          lit(k).as("k"))
-    }
-    hitsOf(lshTopKTuned(spark, dir, k), "lsh")
-      .unionByName(hitsOf(ivfTopK(spark, dir, k), "ivf"))
-  }
+  def annRecall(spark: SparkSession, dir: String): DataFrame =
+    perTier(spark, dir, Seq(count(lit(1)).as("hits")),
+      coalesce(col("hits"), lit(0L)).as("hits"),
+      lit(DefaultK).as("k"))
 
   /** nDCG discount table: floor(10000 / log2(i+1)) for rank i = 1..3 —
     * a CONSTANT literal table (shared with the oracle via SparkEntry's
@@ -601,32 +577,29 @@ object SimilarityOps {
     * rows) joins the broadcast exact top-k; the corpus is touched only
     * inside the tier searches themselves.
     */
-  def annRanking(spark: SparkSession, dir: String, k: Int = DefaultK): DataFrame = {
-    require(k == NdcgWeightsX10000.length, s"discount table is defined for k=${NdcgWeightsX10000.length}")
-    val exact = bruteTopK(spark, dir, k).select(col("query_id"), col("neighbor_id"))
-    val queries = table(spark, dir, "embeddings")
-      .filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"))
-    val idcg = NdcgWeightsX10000.take(k).sum
+  def annRanking(spark: SparkSession, dir: String): DataFrame = {
+    require(DefaultK == NdcgWeightsX10000.length, s"discount table is defined for k=${NdcgWeightsX10000.length}")
+    val idcg = NdcgWeightsX10000.sum
     val wCase = NdcgWeightsX10000.zipWithIndex
       .map { case (w, i) => s"WHEN ${i + 1} THEN ${w}L" }
       .mkString("CASE rank ", " ", " ELSE 0L END")
-    def tier(approx: DataFrame, method: String): DataFrame = {
-      val h = approx
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-        .join(broadcast(exact), Seq("query_id", "neighbor_id"))
-        .groupBy(col("query_id"))
-        .agg(sum(expr(wCase)).as("dcg"), min(col("rank")).as("first_hit"))
-      queries.join(broadcast(h), Seq("query_id"), "left")
-        .select(
-          lit(method).as("method"), col("query_id"),
-          coalesce(col("dcg"), lit(0L)).as("dcg_x10000"),
-          lit(idcg).as("idcg_x10000"),
-          expr(s"(coalesce(dcg, 0L) * 10000) div ${idcg}L").as("ndcg_x10000"),
-          coalesce(expr("10000L div cast(first_hit as long)"), lit(0L)).as("rr_x10000"))
-    }
-    tier(lshTopKTuned(spark, dir, k), "lsh")
-      .unionByName(tier(ivfTopK(spark, dir, k), "ivf"))
+    perTier(spark, dir, Seq(sum(expr(wCase)).as("dcg"), min(col("rank")).as("first_hit")),
+      coalesce(col("dcg"), lit(0L)).as("dcg_x10000"),
+      lit(idcg).as("idcg_x10000"),
+      expr(s"(coalesce(dcg, 0L) * 10000) div ${idcg}L").as("ndcg_x10000"),
+      coalesce(expr("10000L div cast(first_hit as long)"), lit(0L)).as("rr_x10000"))
+  }
+
+  /** (method, query_id, `out`...) for the lsh and ivf tiers, `aggs` taken
+    * over each tier's hits in the ONE brute-force top-k both share.
+    */
+  private def perTier(spark: SparkSession, dir: String, aggs: Seq[Column], out: Column*): DataFrame = {
+    val exact = bruteTopK(spark, dir)
+    def tier(approx: DataFrame, method: String): DataFrame =
+      hitsPerQuery(spark, dir, approx, exact, aggs: _*)
+        .select(lit(method).as("method") +: col("query_id") +: out: _*)
+    tier(lshTopKTuned(spark, dir), "lsh")
+      .unionByName(tier(ivfTopK(spark, dir), "ivf"))
   }
 
   val TopicCardK = 10
@@ -647,9 +620,9 @@ object SimilarityOps {
     * over the (cells x vocab)-bounded scored frame. The only driver
     * scalar is the distinct-cell count (<= nList).
     */
-  def cellTopicCards(spark: SparkSession, dir: String, k: Int = TopicCardK): DataFrame = {
+  def cellTopicCards(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val vecs = table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val vecs = embeddings(spark, dir)
     val cells = assignCells(vecs, ivfCentroids(spark, dir))
     val member = table(spark, dir, "documents").select(col("doc_id"), col("text"))
       .join(cells.withColumnRenamed("vec_id", "doc_id"), "doc_id")
@@ -665,10 +638,36 @@ object SimilarityOps {
       .withColumn("score",
         col("tf") * expr(s"cast(length(conv((${nCells}L * 10000L) div cdf, 10, 2)) - 1 as bigint)"))
       .withColumn("rank", row_number().over(byCell))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= TopicCardK)
       .join(broadcast(sizes), "cell")
       .select(col("cell"), col("n_docs"), col("word"), col("tf"),
         col("score"), col("rank"))
+  }
+
+  /** The persisted IVF index of q185/q191. Build phase (once per corpus
+    * snapshot): `stored` (vec_id plus the payload to serve) is written as
+    * parquet partitioned by its assigned cell under `base/index`, and the
+    * centroids under `base/centroids`. Query phase: the persisted
+    * centroids route the float query sample ([[probe]]), and only the
+    * probed cells' partitions of the index are read. Returns (probed
+    * (query_id, q_embedding, cell), the pruned index scan).
+    *
+    * The probed-cell literal list driving the pruning is driver-side by
+    * contract: nQueries x nProbe cell ids (16 at defaults), never data.
+    */
+  private def persistedProbe(
+      spark: SparkSession, dir: String, base: String, stored: DataFrame): (DataFrame, DataFrame) = {
+    graft.functions.GraftFunctions.register(spark)
+    val vecs = embeddings(spark, dir)
+    val centroids = ivfCentroids(spark, dir)
+    assignCells(vecs, centroids).join(stored, "vec_id")
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$base/index")
+    centroids.write.mode("overwrite").parquet(s"$base/centroids")
+    val probed = probe(floatQueries(vecs), spark.read.parquet(s"$base/centroids"))
+    val probedCells = probed.select(col("cell")).distinct()
+      .collect().map(_.getInt(0)) // <= nQueries x nProbe ids by contract
+    (probed, spark.read.parquet(s"$base/index")
+      .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*)))
   }
 
   /** Persisted-index IVF search (q185) — the deployment shape of q54:
@@ -680,48 +679,10 @@ object SimilarityOps {
     * does this). Results are IDENTICAL to q54 by construction (same
     * deterministic centroids, same probe rule, same scoring), so it
     * shares q54's oracle verbatim.
-    *
-    * The probed-cell literal list driving the pruning is driver-side by
-    * contract: nQueries x nProbe cell ids (16 at defaults), never data.
     */
-  def ivfIndexedTopK(
-      spark: SparkSession, dir: String, base: String, k: Int = DefaultK,
-      nList: Int = IvfNList, nProbe: Int = IvfNProbe, iters: Int = IvfIters): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    val vecs = table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    // build phase (once per corpus snapshot)
-    val centroids = ivfCentroids(spark, dir, nList, iters)
-    assignCells(vecs, centroids).join(vecs, "vec_id")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$base/index")
-    centroids.write.mode("overwrite").parquet(s"$base/centroids")
-    // query phase: everything reads the persisted artifacts
-    val cents = spark.read.parquet(s"$base/centroids")
-    val queries = vecs.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("l2_x10000").asc, col("cell").asc)
-    val probed = queries
-      .crossJoin(broadcast(cents))
-      .select(col("query_id"), col("q_embedding"), col("cell"),
-        expr("graft_l2_x10000(q_embedding, centroid)").as("l2_x10000"))
-      .withColumn("pr", row_number().over(wq))
-      .filter(col("pr") <= nProbe)
-      .select(col("query_id"), col("q_embedding"), col("cell"))
-    val probedCells = probed.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)) // <= nQueries x nProbe ids by contract
-    val idx = spark.read.parquet(s"$base/index")
-      .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*))
-    val scored = idx
-      .join(broadcast(probed), Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr("graft_cosine_x10000(q_embedding, embedding)").as("cosine_x10000"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_x10000").desc, col("neighbor_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine_x10000"))
+  def ivfIndexedTopK(spark: SparkSession, dir: String, base: String): DataFrame = {
+    val (probed, idx) = persistedProbe(spark, dir, base, embeddings(spark, dir))
+    cosineTopK(cosineScores(idx.join(broadcast(probed), Seq("cell"))))
   }
 
   /** Quantized persisted-index IVF search (q191) — the COMPOSED 100 TB
@@ -733,71 +694,17 @@ object SimilarityOps {
     * cosine, zero float ops in the hot loop). The coarse ROUTER stays
     * float (centroid probe selection — the standard IVF/PQ split:
     * quantize the stored vectors, not the router). Output is the
-    * q59-shaped per-query recall row against the float brute-force
+    * q156-shaped per-query recall row against the float brute-force
     * baseline: the acceptance instrument for serving from the
-    * compressed pruned index (`SimilaritySpec` pins mean recall at or
-    * above the q156 0.8 bar).
+    * compressed pruned index (`TrainingIvfSpec` pins each query's
+    * overlap and mean recall at or above the q156 0.8 bar).
     */
-  def ivfQuantizedIndexTopK(
-      spark: SparkSession, dir: String, base: String, k: Int = DefaultK,
-      nList: Int = IvfNList, nProbe: Int = IvfNProbe, iters: Int = IvfIters): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    val vecs = table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    // build phase: cell-partitioned CODE index (q185's layout, q154's codes)
-    val centroids = ivfCentroids(spark, dir, nList, iters)
-    val codes = codeFrame(spark, dir)
-      .select(col("vec_id"), col("codes"),
-        aggregate(transform(col("codes"), c => (c * c).cast("long")),
-          lit(0L), (a, x) => a + x).as("n2"))
-    assignCells(vecs, centroids).join(codes, "vec_id")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$base/index")
-    centroids.write.mode("overwrite").parquet(s"$base/centroids")
-    // query phase: float router picks the probe cells (q54/q185 rule)
-    val cents = spark.read.parquet(s"$base/centroids")
-    val queries = vecs.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("l2_x10000").asc, col("cell").asc)
-    val probedQ = queries
-      .crossJoin(broadcast(cents))
-      .select(col("query_id"), col("cell"),
-        expr("graft_l2_x10000(q_embedding, centroid)").as("l2_x10000"))
-      .withColumn("pr", row_number().over(wq))
-      .filter(col("pr") <= nProbe)
-      .select(col("query_id"), col("cell"))
-    val qcodes = codes.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("codes").as("qcodes"),
-        col("n2").as("qn2"))
-    val probed = probedQ.join(qcodes, "query_id")
-    val probedCells = probed.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)) // <= nQueries x nProbe ids by contract
-    val idx = spark.read.parquet(s"$base/index")
-      .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*))
-    val scored = idx
-      .join(broadcast(probed), Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("dot",
-        aggregate(zip_with(col("qcodes"), col("codes"), (a, b) => (a * b).cast("long")),
-          lit(0L), (a, x) => a + x))
-      .withColumn("s2", expr("""CASE WHEN dot < 0
-          THEN -((dot * dot * 10000) div (qn2 * n2))
-          ELSE (dot * dot * 10000) div (qn2 * n2) END"""))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("s2").desc, col("vec_id").asc)
-    val quantTop = scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    // recall vs the float brute baseline — the q59 overlap recipe
-    val floatTop = bruteTopK(spark, dir, k)
-      .select(col("query_id"), col("neighbor_id"))
-    val hits = quantTop.join(floatTop, Seq("query_id", "neighbor_id"))
-      .groupBy(col("query_id")).agg(count(lit(1)).as("hits"))
-    queries.select(col("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"),
-        coalesce(col("hits"), lit(0L)).as("n_overlap"),
-        expr(s"coalesce(hits, 0L) * 10000 div $k").as("recall_x10000"))
+  def ivfQuantizedIndexTopK(spark: SparkSession, dir: String, base: String): DataFrame = {
+    val codes = codeNorms(spark, dir)
+    val (probed, idx) = persistedProbe(spark, dir, base, codes)
+    val probedCodes = probed.select(col("query_id"), col("cell"))
+      .join(codeQueries(codes), "query_id")
+    overlapRecall(spark, dir, codeTopK(idx.join(broadcast(probedCodes), Seq("cell"))))
   }
 
   /** Base-corpus size for the q187 frozen-centroid append split. */
@@ -812,14 +719,9 @@ object SimilarityOps {
     * that retrain). Same search shape as q54, oracled end-to-end
     * against base-trained centroids materialized by Verify.
     */
-  def ivfAppendTopK(
-      spark: SparkSession, dir: String, k: Int = DefaultK,
-      nList: Int = IvfNList, nProbe: Int = IvfNProbe, iters: Int = IvfIters): DataFrame = {
-    val vecs = table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val frozen = ivfCentroidsOf(vecs.filter(col("vec_id") < IvfAppendBase), nList, iters)
-    val queries = vecs.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    ivfTopKWith(vecs, queries, frozen, k, nProbe)
+  def ivfAppendTopK(spark: SparkSession, dir: String): DataFrame = {
+    val vecs = embeddings(spark, dir)
+    ivfTopKWith(vecs, ivfCentroidsOf(vecs.filter(col("vec_id") < IvfAppendBase)))
   }
 
   /** Cell drift after append (q188) — the RETRAIN TRIGGER for the q187
@@ -831,7 +733,7 @@ object SimilarityOps {
     * one assignment pass, one cell-keyed agg.
     */
   def ivfCellDrift(spark: SparkSession, dir: String): DataFrame = {
-    val vecs = table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val vecs = embeddings(spark, dir)
     val frozen = ivfCentroidsOf(vecs.filter(col("vec_id") < IvfAppendBase))
     assignCells(vecs, frozen)
       .groupBy(col("cell"))
@@ -848,20 +750,12 @@ object SimilarityOps {
     * recipe). Read together with q188: drift says the distribution
     * moved, this says what that movement costs in answer quality.
     */
-  def ivfAppendRecall(spark: SparkSession, dir: String, k: Int = DefaultK): DataFrame = {
-    val fresh = ivfTopK(spark, dir, k).select(col("query_id"), col("neighbor_id"))
-    val frozen = ivfAppendTopK(spark, dir, k).select(col("query_id"), col("neighbor_id"))
-    val hits = frozen
-      .join(broadcast(fresh), Seq("query_id", "neighbor_id"))
-      .groupBy(col("query_id")).agg(count(lit(1)).as("hits"))
-    table(spark, dir, "embeddings")
-      .filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"))
-      .join(broadcast(hits), Seq("query_id"), "left")
+  def ivfAppendRecall(spark: SparkSession, dir: String): DataFrame =
+    hitsPerQuery(spark, dir, ivfAppendTopK(spark, dir), ivfTopK(spark, dir),
+        count(lit(1)).as("hits"))
       .select(col("query_id"), coalesce(col("hits"), lit(0L)).as("hits"),
-        lit(k).as("k"))
-      .withColumn("recall_x10000", expr(s"(hits * 10000) div $k"))
-  }
+        lit(DefaultK).as("k"))
+      .withColumn("recall_x10000", expr(s"(hits * 10000) div $DefaultK"))
 
   /** Cell prototypicality outliers (q182) — the OTHER half of the D4
     * recipe (Tirumala et al. 2023: SemDeDup prunes cluster-redundant
@@ -878,7 +772,7 @@ object SimilarityOps {
     */
   def cellOutliers(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val vecs = table(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val vecs = embeddings(spark, dir)
     val centroids = ivfCentroids(spark, dir)
     val scored = assignCells(vecs, centroids)
       .join(vecs, "vec_id")
@@ -903,7 +797,7 @@ object SimilarityOps {
   /** ANN-mined contrastive triplets (the production upgrade of q53's
     * positional pairs): for each anchor in the query sample, the hardest
     * positive (same label, highest cosine) and the HARD NEGATIVE
-    * (different label, highest cosine) drawn from the anchor's nProbe
+    * (different label, highest cosine) drawn from the anchor's IvfNProbe
     * IVF cells — mining negatives from the ANN index instead of random
     * sampling is what makes contrastive embedding training converge at
     * scale, and the margin column (pos - neg) is the curriculum signal.
@@ -915,39 +809,27 @@ object SimilarityOps {
     * cell) set, two conditional argmax aggregates on (anchor, small
     * ints). Never corpus x corpus.
     */
-  def hardNegatives(
-      spark: SparkSession, dir: String,
-      nList: Int = IvfNList, nProbe: Int = IvfNProbe, iters: Int = IvfIters): DataFrame = {
+  def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val vecs = table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label"))
-    val centroids = ivfCentroids(spark, dir, nList, iters)
+    val centroids = ivfCentroids(spark, dir)
     val indexed = assignCells(vecs.select(col("vec_id"), col("embedding")), centroids)
       .join(vecs, "vec_id")
-    val anchors = vecs.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("anchor_id"), col("embedding").as("a_emb"),
-        col("label").as("anchor_label"))
-    val wq = Window.partitionBy(col("anchor_id"))
-      .orderBy(col("l2_x10000").asc, col("cell").asc)
-    val probed = anchors
-      .crossJoin(broadcast(centroids))
-      .select(col("anchor_id"), col("a_emb"), col("anchor_label"), col("cell"),
-        expr("graft_l2_x10000(a_emb, centroid)").as("l2_x10000"))
-      .withColumn("pr", row_number().over(wq))
-      .filter(col("pr") <= nProbe)
-      .select(col("anchor_id"), col("a_emb"), col("anchor_label"), col("cell"))
+    val anchors = querySet(vecs, col("embedding").as("q_embedding"),
+      col("label").as("anchor_label"))
     val scored = indexed
-      .join(broadcast(probed), Seq("cell"))
-      .filter(col("vec_id") =!= col("anchor_id"))
-      .select(col("anchor_id"), col("anchor_label"), col("vec_id"), col("label"),
-        expr("graft_cosine_x10000(a_emb, embedding)").as("cos"))
-    def side(flag: org.apache.spark.sql.Column, tag: String) =
+      .join(broadcast(probe(anchors, centroids)), Seq("cell"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id").as("anchor_id"), col("anchor_label"), col("vec_id"), col("label"),
+        expr("graft_cosine_x10000(q_embedding, embedding)").as("cos"))
+    def side(flag: Column, tag: String) =
       scored.filter(flag)
         .groupBy(col("anchor_id"))
         .agg(
           max_by(col("vec_id"), struct(col("cos"), -col("vec_id"))).as(s"${tag}_id"),
           max(col("cos")).as(s"${tag}_cos_x10000"))
-    anchors.select(col("anchor_id"), col("anchor_label"))
+    anchors.select(col("query_id").as("anchor_id"), col("anchor_label"))
       .join(side(col("label") === col("anchor_label"), "pos"), Seq("anchor_id"), "left")
       .join(side(col("label") =!= col("anchor_label"), "neg"), Seq("anchor_id"), "left")
       .withColumn("margin_x10000", col("pos_cos_x10000") - col("neg_cos_x10000"))

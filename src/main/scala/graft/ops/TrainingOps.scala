@@ -571,8 +571,8 @@ object TrainingOps {
     * (doc_id, n_tokens, start_offset, chunk_first, chunk_last), with
     * chunk_last = -1 sentinel for zero-token docs (they occupy no chunk).
     *
-    * The global running offset uses the same scale-safe two-phase pattern
-    * as ShredOps.registry: a global-order window would funnel the corpus
+    * The global running offset uses the scale-safe two-phase pattern
+    * (`RelationalOps.twoPhaseGlobal`): a global-order window would funnel the corpus
     * through ONE partition, so docs are range-partitioned by doc_id
     * (contiguous ranges), each partition computes its local prefix sums,
     * and a driver-side prefix sum over the tiny per-partition totals
@@ -680,22 +680,8 @@ object TrainingOps {
   def packSequences(spark: SparkSession, dir: String, budget: Long = DefaultChunkBudget): DataFrame = {
     val toks = TextOps.tokenCountBpe(spark, dir)
       .withColumnRenamed("n_bpe_tokens", "n_tokens")
-    val ranged = toks
-      .repartitionByRange(col("doc_id"))
-      .withColumn("part", spark_partition_id())
-      .localCheckpoint()
-    val counts = ranged.groupBy(col("part")).agg(sum(col("n_tokens")).as("tok"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets = counts.scanLeft((Int.MinValue, 0L)) {
-      case ((_, acc), (p, n)) => (p, acc + n)
-    }.sliding(2).collect { case Array((_, off), (p, _)) => (p, off) }.toMap
-    val offsetDf = spark.createDataFrame(
-      if (offsets.isEmpty) Seq((0, 0L)) else offsets.toSeq).toDF("part", "offset")
-    val wp = Window.partitionBy(col("part")).orderBy(col("doc_id"))
-    ranged
-      .withColumn("cum_local", sum(col("n_tokens")).over(wp))
-      .join(broadcast(offsetDf), "part")
-      .withColumn("cum", col("offset") + col("cum_local"))
+    RelationalOps.twoPhaseGlobal(toks,
+        Seq(col("doc_id")), col("n_tokens"), sum(col("n_tokens")), "cum")
       .withColumn("start_offset", col("cum") - col("n_tokens"))
       .withColumn("chunk_first", expr(s"start_offset div ${budget}L"))
       .withColumn(

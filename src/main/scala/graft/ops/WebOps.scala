@@ -553,38 +553,6 @@ object WebOps {
   /** Total page budget for [[crawlBudget]]. */
   val CrawlBudget = 100000L
 
-  /** Scale-safe GLOBAL rank in `order` — the `ShredOps.registry` /
-    * `TrainingOps.packSequences` two-phase shape: range-partition the
-    * frame in rank order, number each partition locally, and add a
-    * driver prefix-sum offset over the tiny per-partition count table.
-    * `offset(part) + local_rn` equals `row_number` over the global order
-    * for ANY sampled boundary set (ranges are contiguous in rank order),
-    * so no single partition ever carries the whole frame — at web scale
-    * |hosts| is 10⁷–10⁸ and an unpartitioned window would funnel them
-    * through one task. The localCheckpoint pins one sampled boundary set
-    * so the count pass and the rank pass agree.
-    */
-  private def globalRankTwoPhase(df: DataFrame, rankCol: String,
-      order: Seq[Column]): DataFrame = {
-    val spark = df.sparkSession
-    val ranged = df.repartitionByRange(order: _*)
-      .withColumn("part", spark_partition_id())
-      .localCheckpoint()
-    val counts = ranged.groupBy(col("part")).count()
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets = counts.scanLeft((Int.MinValue, 0L)) {
-      case ((_, acc), (p, n)) => (p, acc + n)
-    }.sliding(2).collect { case Array((_, off), (p, _)) => (p, off) }.toMap
-    val offsetDf = spark.createDataFrame(
-      if (offsets.isEmpty) Seq((0, 0L)) else offsets.toSeq).toDF("part", "offset")
-    val wp = Window.partitionBy(col("part")).orderBy(order: _*)
-    ranged
-      .withColumn("local_rn", row_number().over(wp))
-      .join(broadcast(offsetDf), "part")
-      .withColumn(rankCol, col("offset") + col("local_rn"))
-      .drop("part", "local_rn", "offset")
-  }
-
   /** q144: crawl-budget apportionment — a fixed page budget split across
     * hosts PROPORTIONAL to PageRank by the largest-remainder (Hamilton)
     * method, all in exact integers: `base = budget·rank div total`, the
@@ -595,7 +563,7 @@ object WebOps {
     * Scale shape: ranks stay a host-keyed frame; the two scalars (rank
     * total, leftover) ride as broadcast 1-row crossJoins (the q110
     * discipline — no driver collect). The remainder ranking is the
-    * [[globalRankTwoPhase]] range-partitioned rank — never an
+    * `RelationalOps.twoPhaseGlobal` range-partitioned rank — never an
     * unpartitioned window: |hosts| is corpus-policy-bounded but still
     * 10⁷–10⁸ at web scale, too many for one task.
     */
@@ -606,8 +574,8 @@ object WebOps {
       .withColumn("base", expr(s"($budget * rank_x1e12) div total_rank"))
       .withColumn("rem", expr(s"($budget * rank_x1e12) % total_rank"))
     val leftover = based.agg((lit(budget) - sum(col("base"))).as("leftover"))
-    globalRankTwoPhase(based.crossJoin(broadcast(leftover)),
-        "pos", Seq(col("rem").desc, col("host").asc))
+    RelationalOps.twoPhaseGlobal(based.crossJoin(broadcast(leftover)),
+        Seq(col("rem").desc, col("host").asc), lit(1L), row_number(), "pos")
       .withColumn("alloc",
         col("base") + when(col("pos") <= col("leftover"), 1L).otherwise(0L))
       .select(col("host"), col("rank_x1e12"), col("base"), col("alloc"))
@@ -629,7 +597,7 @@ object WebOps {
     * Σ final_alloc ≤ budget always.
     *
     * Scale shape: q144's shape + two more broadcast 1-row scalars
-    * (surplus, open rank mass) and one more [[globalRankTwoPhase]]
+    * (surplus, open rank mass) and one more `RelationalOps.twoPhaseGlobal`
     * range-partitioned rank (never an unpartitioned window).
     */
   def politeCrawlSchedule(docs: DataFrame, budget: Long = CrawlBudget,
@@ -640,7 +608,7 @@ object WebOps {
     val tot = a1.agg(
       sum(col("alloc") - col("alloc1")).as("surplus"),
       sum(when(!col("was_capped"), col("rank_x1e12")).otherwise(0L)).as("open_rank"))
-    val b = globalRankTwoPhase(
+    val b = RelationalOps.twoPhaseGlobal(
       a1.crossJoin(broadcast(tot))
         .withColumn("extra_base",
           when(col("was_capped") || col("open_rank") === 0L, 0L)
@@ -648,7 +616,7 @@ object WebOps {
         .withColumn("extra_rem",
           when(col("was_capped") || col("open_rank") === 0L, -1L)
             .otherwise(expr("(surplus * rank_x1e12) % open_rank"))),
-      "pos", Seq(col("extra_rem").desc, col("host").asc))
+      Seq(col("extra_rem").desc, col("host").asc), lit(1L), row_number(), "pos")
     val seats = b.agg((max(col("surplus")) - sum(col("extra_base"))).as("seats"))
     b.crossJoin(broadcast(seats))
       .withColumn("extra",

@@ -32,19 +32,8 @@ object TextAlgos {
     else text.trim.split("\\s+").filter(_.nonEmpty)
 
   /** Word w-shingles as 64-bit hashes (deduplicated). */
-  def shingleHashes(tokens: Array[String], w: Int): Array[Long] = {
-    if (tokens.length < w) return Array.empty
-    val out = new Array[Long](tokens.length - w + 1)
-    var i = 0
-    while (i + w <= tokens.length) {
-      var h = 0L
-      var j = 0
-      while (j < w) { h = mix64(h ^ hashString(tokens(i + j))); j += 1 }
-      out(i) = h
-      i += 1
-    }
-    out.distinct
-  }
+  def shingleHashes(tokens: Array[String], w: Int): Array[Long] =
+    shingleHashesOrdered(tokens, w).distinct
 
   /** MinHash signature of k permutations via k independent mixes of each
     * shingle hash (one-pass, O(shingles * k)).

@@ -69,16 +69,20 @@ class OpsSpec extends AnyFunSuite with SparkSessionFixture.TempDirs {
 
   test("LSH ANN: results collide in some hash table, with correct cosines") {
     import spark.implicits._
-    val got = SimilarityOps.lshTopK(spark, dir).as[(Long, Long, Int, Long)].collect()
+    val got = SimilarityOps.lshTopKTuned(spark, dir).as[(Long, Long, Int, Long)].collect()
     val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
       .select("vec_id", "embedding").as[(Long, Array[Float])].collect().toMap
     assert(got.nonEmpty)
+    // the tuned tables: b low bits of the fixed-stride full-width buckets,
+    // probed at Hamming distance <= 1
+    val p = SimilarityOps.tuneLshParams(spark, dir)
+    def bucket(v: Array[Float], t: Int): Int = TextAlgos.hyperplaneBucket(
+      v, SimilarityOps.TuneMaxPlanes, t * SimilarityOps.TuneMaxPlanes) & ((1 << p.nPlanes) - 1)
     got.foreach { case (qid, nid, _, c) =>
-      val collide = (0 until SimilarityOps.LshNTables).exists { t =>
-        TextAlgos.hyperplaneBucket(vecs(qid), SimilarityOps.LshNPlanes, t * SimilarityOps.LshNPlanes) ==
-          TextAlgos.hyperplaneBucket(vecs(nid), SimilarityOps.LshNPlanes, t * SimilarityOps.LshNPlanes)
+      val collide = (0 until p.nTables).exists { t =>
+        java.lang.Integer.bitCount(bucket(vecs(qid), t) ^ bucket(vecs(nid), t)) <= 1
       }
-      assert(collide, s"pair ($qid,$nid) shares no bucket in any table")
+      assert(collide, s"pair ($qid,$nid) is not within Hamming 1 in any table")
       assert(c == math.floor(TextAlgos.cosine(vecs(qid), vecs(nid)) * 10000).toLong)
     }
     // multi-table candidates never produce duplicate (query, neighbor) rows

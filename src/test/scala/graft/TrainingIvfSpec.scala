@@ -806,6 +806,41 @@ class TrainingIvfSpec extends AnyFunSuite with SparkSessionFixture.TempDirs {
     // x int8 scoring); measured 0.9166 at sf0.001
     val mean = got.map(_._3).sum / got.length
     assert(mean >= 8000L, s"mean recall_x10000 $mean below the 0.8 bar")
+    // each query's overlap, recomputed locally: the float router probes
+    // IvfNProbe cells by (floor(l2·10⁴), cell); the int8 codes in them
+    // rank by signed cos² (vec_id tie-break); the reference is the float
+    // brute-force top-k
+    import spark.implicits._
+    val k = SimilarityOps.DefaultK
+    val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
+      .select("vec_id", "embedding").as[(Long, Array[Float])].collect()
+    val cents = localCentroids(vecs, SimilarityOps.IvfNList, SimilarityOps.IvfIters)
+    val assign = localAssign(vecs, cents)
+    val codes = vecs.map { case (id, v) =>
+      val amax = math.max(v.map(x => math.abs(x.toDouble)).max, 1e-30)
+      id -> v.map(x => math.floor(x.toDouble / amax * 127.0 + 0.5).toLong)
+    }.toMap
+    def n2(c: Array[Long]): Long = c.map(x => x * x).sum
+    def s2(a: Array[Long], b: Array[Long]): Long = {
+      val dot = a.zip(b).map { case (x, y) => x * y }.sum
+      val mag = dot * dot * 10000L / (n2(a) * n2(b))
+      if (dot < 0) -mag else mag
+    }
+    val byId = vecs.toMap
+    val expected = vecs.map(_._1).filter(_ < SimilarityOps.NQueries).map { q =>
+      val probed = cents.toSeq.map { case (c, cv) =>
+        (math.floor(TextAlgos.l2(byId(q), cv) * 10000).toLong, c)
+      }.sorted.take(SimilarityOps.IvfNProbe).map(_._2).toSet
+      val quant = vecs.map(_._1)
+        .filter(id => id != q && probed.contains(assign(id)))
+        .sortBy(id => (-s2(codes(q), codes(id)), id)).take(k).toSet
+      val float = vecs
+        .filter(_._1 != q)
+        .sortBy { case (id, v) => (-math.floor(TextAlgos.cosine(byId(q), v) * 10000).toLong, id) }
+        .take(k).map(_._1).toSet
+      q -> (quant & float).size.toLong
+    }.toMap
+    assert(got.map(r => r._1 -> r._2).toMap == expected)
   }
 
   test("semDedup: within-cell domination matches local recompute; pruning genuinely fires") {
